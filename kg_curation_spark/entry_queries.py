@@ -998,13 +998,10 @@ def connected_components_star_query(spark, sf_dir):
     )
     # labels ARE the node names -> ordered-ids mode: no hash joins at
     # init, no name-join/rep assembly; with no self-loops in this graph
-    # the output row set is identical. freeze_min_edges=0 FORCES the
-    # star-freeze path through this oracle row every round — the adaptive
-    # gate (engage >= 1M active edges) would otherwise leave the
-    # production-scale code path without a correctness signal.
-    return connected_components(
-        edges, num_partitions=16, ordered_ids=True, freeze_min_edges=0
-    )
+    # the output row set is identical. At this size the graph finishes on
+    # the driver; tests/test_components_oracle.py also checks this row
+    # with the budget disabled, through the loop and its star freeze.
+    return connected_components(edges, num_partitions=16, ordered_ids=True)
 
 
 @q(

@@ -1,47 +1,62 @@
-"""Connected components over an edge DataFrame — iterative fixpoint.
+"""Connected components over an edge DataFrame.
 
-Catalyst has no iterative operator (SURVEY.md §4); this is the hand-written
-large-star/small-star loop (Kiveris et al., "Connected Components in
-MapReduce and Beyond", SoCC'14) used by the canonicalize stage: similarity/
-redirect edges -> canonical cluster id per entity.
+Used by the canonicalize stage (similarity/redirect edges -> canonical
+cluster id per entity) and the near-dup clustering queries. Output label =
+the smallest node name of the component, on either of two paths chosen by
+ONE adaptive gate on the session's broadcast byte budget
+(``spark.sql.autoBroadcastJoinThreshold``, read by
+``session.broadcast_budget``):
 
-Scale design:
-  * two id modes: by default node names are hashed to longs up front with
-    ``xxhash64`` so strings never shuffle inside the loop (names joined
-    back once at the end); ``ordered_ids=True`` instead runs the loop
-    DIRECTLY on the names — the algorithm only needs a total order — which
-    wins when freezing leaves few rounds (see connected_components);
-    either way no global-ordering window — nothing funnels to one task;
-  * explicit ``repartition(num, 'u')`` before the loop (north rule);
-  * ``localCheckpoint`` each round truncates lineage so round N's plan does
-    not replay rounds 1..N-1;
-  * convergence = no edge changed; bounded O(log n) rounds;
-  * hot hubs (a node with millions of neighbors) are exactly the large-star
-    case — their edges route to the minimum neighbor instead of repeatedly
-    funnelling through one reducer.
+  * driver finish — when the active edge set fits the budget, it is pulled
+    with toArrow from a pinned checkpoint and labelled on the driver by a
+    numpy union-find (min-hooking + pointer jumping); the labels return
+    through an Arrow ``createDataFrame``. The gate has one measure, the
+    Arrow bytes of the edges summed by an Observation on a localCheckpoint
+    (``_row_bytes``): at entry that checkpoint pins the input edges (before
+    any hash table or symmetrize), after every loop round it is the round's
+    own checkpoint. An input above the budget is therefore never computed
+    twice — its pinned checkpoint feeds the loop — and a graph of a few
+    hundred edges costs two small jobs instead of a checkpoint job plus
+    exchanges per round.
+  * the large-star/small-star loop (Kiveris et al., "Connected Components
+    in MapReduce and Beyond", SoCC'14; Catalyst has no iterative operator,
+    SURVEY.md §4) for edge sets above the budget:
+      - two id modes: by default node names are hashed to longs up front
+        with ``xxhash64`` so strings never shuffle inside the loop (names
+        joined back once at the end); ``ordered_ids=True`` runs the loop
+        DIRECTLY on the names — the algorithm only needs a total order;
+        either way no global-ordering window — nothing funnels to one task;
+      - explicit ``repartition(num, 'u')`` before the loop (north rule);
+      - ``localCheckpoint`` each round truncates lineage so round N's plan
+        does not replay rounds 1..N-1;
+      - convergence = no edge changed; bounded O(log n) rounds;
+      - hot hubs (a node with millions of neighbors) are exactly the
+        large-star case — their edges route to the minimum neighbor instead
+        of repeatedly funnelling through one reducer.
 """
 
 from __future__ import annotations
 
 import itertools
 
-from pyspark.sql import DataFrame, Observation
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, StructField, StructType
+
+from ..session import FIXED_WIDTH, broadcast_budget
 
 _obs_seq = itertools.count()
 
 
-def _symmetrize(edges: DataFrame) -> DataFrame:
-    rev = edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    return edges.unionByName(rev).filter(F.col("u") != F.col("v")).distinct()
-
-
 def _sym_dedup_by_u(edges: DataFrame, num_partitions: int) -> DataFrame:
-    """_symmetrize with the exchange order flipped: repartition by u first,
-    dedup (u, v) second. Identical edge set; hash(u) partitioning satisfies
-    the dedup aggregate's (u, v) clustering requirement AND every
+    """Both directions of every non-self-loop edge, deduplicated:
+    repartition by u first, dedup (u, v) second. hash(u) partitioning
+    satisfies the dedup aggregate's (u, v) clustering requirement AND every
     groupBy('u')/join-on-u the loop does next, so each symmetrize costs one
-    exchange instead of distinct's (u, v) exchange plus a repartition."""
+    exchange instead of a (u, v) distinct's exchange plus a repartition."""
     rev = edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     return (
         edges.unionByName(rev)
@@ -51,18 +66,120 @@ def _sym_dedup_by_u(edges: DataFrame, num_partitions: int) -> DataFrame:
     )
 
 
+# ---------------------------------------------------------------------------
+# driver finish
+
+
+def _row_bytes(schema: StructType) -> Column:
+    """Arrow bytes of one row: a fixed-width value takes its width, any
+    other value 4 offset bytes plus the length of its string form."""
+    total = F.lit(0)
+    for f in schema:
+        w = FIXED_WIDTH.get(f.dataType.typeName())
+        if w is None:
+            n = F.octet_length(F.col(f.name).cast("string"))
+            total = total + 4 + F.coalesce(n, F.lit(0))
+        else:
+            total = total + w
+    return total
+
+
+def _checkpoint_observed(df: DataFrame, **metrics: Column) -> tuple[DataFrame, dict]:
+    """localCheckpoint df and return it with the named aggregate metrics,
+    which are an Observation on the checkpointed plan: they come from the
+    checkpoint's own job, at no extra Spark job."""
+    obs = Observation(f"cc_obs_{next(_obs_seq)}")
+    out = df.observe(obs, *[c.alias(k) for k, c in metrics.items()]).localCheckpoint()
+    return out, obs.get
+
+
+def _min_roots(n: int, a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Union-find over n dense ids and edges (a, b): -> root[i] = the
+    smallest id in i's component. Each pass hooks every root onto the
+    smallest root adjacent to it (min-hooking), then pointer-jumps until
+    every id points straight at its root; edges whose ends already share a
+    root drop out. root[i] <= i always holds, so no cycle can form."""
+    root = np.arange(n)
+    while True:
+        ra, rb = root[a], root[b]
+        live = ra != rb
+        if not live.any():
+            return root
+        a, b, ra, rb = a[live], b[live], ra[live], rb[live]
+        np.minimum.at(root, np.maximum(ra, rb), np.minimum(ra, rb))
+        while True:
+            nxt = root[root]
+            if np.array_equal(nxt, root):
+                break
+            root = nxt
+
+
+def _driver_labels(
+    spark: SparkSession,
+    t: pa.Table,
+    dtype: DataType,
+    names: tuple[str, str],
+    keep_isolated: bool,
+) -> DataFrame:
+    """Label the collected (u, v) edge table on the driver -> DataFrame
+    names = (node col, label col), both typed dtype: one row per node,
+    label = the smallest node of its component. An edge with a null
+    endpoint links nothing. keep_isolated=True (hashed mode's node set):
+    every non-null name seen gets a row, self-loop-only ones included, and
+    a null name gets one (null, null) row. keep_isolated=False (the loop's
+    node set): only endpoints of non-self-loop edges get rows.
+
+    The names are factorized to dense ids in Arrow's sort order (a
+    dictionary encode plus a sort of the distinct names — 10x faster than
+    ``np.unique`` on object strings), so the smallest id is the smallest
+    name: numeric order for integers, UTF-8 byte order for strings — the
+    orders Spark compares in."""
+    u, v = t.column(0), t.column(1)
+    arrow_type = t.schema.field(0).type
+    link = pc.fill_null(pc.not_equal(u, v), False)
+    ends = [pc.filter(u, link), pc.filter(v, link)]
+    m = len(ends[0])
+    if keep_isolated:
+        rest = pc.invert(link)
+        ends += [pc.filter(u, rest).drop_null(), pc.filter(v, rest).drop_null()]
+    flat = pa.chunked_array(
+        [c for x in ends for c in x.chunks], type=arrow_type
+    ).combine_chunks()
+    enc = pc.dictionary_encode(flat)
+    order = pc.array_sort_indices(enc.dictionary).to_numpy()
+    rank = np.empty(len(order), np.int64)
+    rank[order] = np.arange(len(order))
+    idx = rank[enc.indices.to_numpy()]
+    node_col = enc.dictionary.take(pa.array(order))
+    root = _min_roots(len(node_col), idx[:m], idx[m : 2 * m])
+    label_col = node_col.take(pa.array(root))
+    if keep_isolated and u.null_count + v.null_count:
+        null = pa.nulls(1, arrow_type)
+        node_col = pa.concat_arrays([node_col, null])
+        label_col = pa.concat_arrays([label_col, null])
+    schema = StructType([StructField(names[0], dtype), StructField(names[1], dtype)])
+    return spark.createDataFrame(
+        pa.table({names[0]: node_col, names[1]: label_col}), schema=schema
+    )
+
+
+# ---------------------------------------------------------------------------
+# large-star/small-star loop
+
+
 def _cc_loop(
     e: DataFrame,
     num_partitions: int,
     max_iter: int,
     freeze_stars: bool,
-    freeze_min_edges: int = 1_000_000,
+    budget: int,
 ) -> DataFrame:
     """Large-star/small-star fixpoint over (u, v) edges of ANY ordered
     type (longs or strings — the algorithm only needs a total order).
     -> (u, c): one row per node appearing in the symmetric graph,
     c = minimum node id of its component. Self-loop-only nodes are absent
-    (callers decide whether isolated nodes need rows).
+    (callers decide whether isolated nodes need rows). Finishes on the
+    driver as soon as a round's edge set fits ``budget`` bytes.
 
     Constraint propagation is disabled while the loop builds its
     checkpoints (restored on exit): ``localCheckpoint`` captures the source
@@ -79,7 +196,7 @@ def _cc_loop(
     conf_prev = spark.conf.get(_CONF, "true")
     spark.conf.set(_CONF, "false")
     try:
-        return _cc_loop_inner(e, num_partitions, max_iter, freeze_stars, freeze_min_edges)
+        return _cc_loop_inner(e, num_partitions, max_iter, freeze_stars, budget)
     finally:
         spark.conf.set(_CONF, conf_prev)
 
@@ -112,57 +229,53 @@ def _cc_loop_inner(
     num_partitions: int,
     max_iter: int,
     freeze_stars: bool,
-    freeze_min_edges: int,
+    budget: int,
 ) -> DataFrame:
+    row_bytes = _row_bytes(e.schema)
 
     def _checkpoint_with_sig(df):
-        """Materialize one round AND collect its edge-set signature in the
-        SAME job: the signature is an Observation on the checkpointed plan,
-        so convergence costs zero extra Spark jobs per round. bit_xor is
-        overflow-free under ANSI mode and edges are distinct (no xor
-        cancellation), so (xor of xxhash64, count) identifies the edge set
-        order-insensitively."""
-        obs = Observation(f"cc_sig_{next(_obs_seq)}")
-        out = df.observe(
-            obs,
-            F.bit_xor(F.xxhash64("u", "v")).alias("s"),
-            F.count(F.lit(1)).alias("n"),
-        ).localCheckpoint()
-        m = obs.get
-        return out, (m["s"], m["n"])
+        """Materialize one round AND collect its edge-set signature and
+        byte size in the SAME job: they are an Observation on the
+        checkpointed plan, so convergence and the driver-finish gate cost
+        zero extra Spark jobs per round. bit_xor is overflow-free under
+        ANSI mode and edges are distinct (no xor cancellation), so (xor of
+        xxhash64, count) identifies the edge set order-insensitively."""
+        out, m = _checkpoint_observed(
+            df,
+            s=F.bit_xor(F.xxhash64("u", "v")),
+            n=F.count(F.lit(1)),
+            b=F.sum(row_bytes),
+        )
+        return out, (m["s"], m["n"]), m["b"] or 0
 
-    def _round_partitions(n_edges: int) -> int:
-        """Scale-adaptive round partitioning (guide §2): the active edge
-        count is already known for FREE from the fused signature, so size
-        each round's shuffle to it — ~200k edges (~2-10 MB of string edges)
-        per partition, floored at 1, capped at the caller's num_partitions.
-        At scale (edges >> 200k * num_partitions) this is exactly the old
-        constant; on a nearly-converged (or small) frontier it stops paying
-        num_partitions-task scheduling overhead per round for a handful of
-        rows."""
-        return max(1, min(num_partitions, n_edges // 200_000 + 1))
-
-    g, sig_old = _checkpoint_with_sig(_sym_dedup_by_u(e, num_partitions))
+    g, sig_old, g_bytes = _checkpoint_with_sig(_sym_dedup_by_u(e, num_partitions))
     g_blocks = _checkpoint_blocks(g)
     frozen_parts: list[DataFrame] = []
+    labels = None
     for _ in range(max_iter):
         if sig_old[1] == 0:
             break  # no active edges left — everything frozen or isolated
+        # driver finish: g is symmetric, so its u < v half carries every
+        # edge once, in half of the observed bytes — pulling it is one job
+        # over the pinned checkpoint
+        if g_bytes // 2 <= budget:
+            half = g.filter(F.col("u") < F.col("v")).toArrow()
+            labels = _driver_labels(
+                e.sparkSession, half, g.schema["u"].dataType, ("u", "c"), False
+            )
+            break
         # per-node neighborhood min + degree: feeds BOTH the freeze test
         # and large-star's m = min(N(u) ∪ {u})
         stats = g.groupBy("u").agg(
             F.min("v").alias("mn"), F.count(F.lit(1)).alias("deg")
         )
-        # ADAPTIVE freeze: the test costs ~4 extra small shuffles, an
-        # anti-join and one eager-checkpoint job per round — pure overhead
-        # when the active edge set is small enough that re-shuffling it to
-        # convergence is cheaper than testing it (tools/freeze_probe.py,
-        # post-fix: −40% wall at 3.6M and at 20.8M mixed edges, but +55%
-        # on a 150k-edge toy star graph). The round's edge count
-        # is already known for free from the fused signature observation,
-        # so gate on it per round: large frontier → freeze pays, small
-        # frontier → run the stock loop to the fixpoint.
-        if freeze_stars and sig_old[1] >= freeze_min_edges:
+        # The freeze test costs ~4 extra small shuffles, an anti-join and
+        # one eager-checkpoint job per round; it pays on the large
+        # frontiers that reach this point (tools/freeze_probe.py: −40% wall
+        # at 3.6M and at 20.8M mixed edges) — small ones finish on the
+        # driver above. With the budget disabled (-1) small frontiers run
+        # it too, at a cost (150k-edge star graph: ~+25–40% wall).
+        if freeze_stars:
             leaves = stats.filter(
                 (F.col("deg") == 1) & (F.col("mn") < F.col("u"))
             ).select("u", F.col("mn").alias("root"))
@@ -212,14 +325,13 @@ def _cc_loop_inner(
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
         )
         keep = g.filter(F.col("v") < F.col("u"))
-        parts = _round_partitions(sig_old[1])
         # symmetrize via repartition-by-u FIRST, then dropDuplicates:
         # HashPartitioning(u) satisfies the (u, v) clustering the dedup
         # aggregate requires, so the dedup runs in-place on the u-partitioned
         # data and the following groupBy('u') reuses the same partitioning —
         # one exchange per symmetrize instead of two (guide §2.4: two
         # operations keyed the same way share one exchange).
-        g2 = _sym_dedup_by_u(large.unionByName(keep), parts)
+        g2 = _sym_dedup_by_u(large.unionByName(keep), num_partitions)
 
         # small-star: connect all smaller neighbors (and u) to the minimum
         halves = g2.filter(F.col("v") < F.col("u"))
@@ -230,7 +342,9 @@ def _cc_loop_inner(
             .unionByName(smin.select(F.col("u"), F.col("m").alias("v")))
         )
         # one job per round: checkpoint + fused signature observation
-        g_new, sig_new = _checkpoint_with_sig(_sym_dedup_by_u(small, parts))
+        g_new, sig_new, g_bytes = _checkpoint_with_sig(
+            _sym_dedup_by_u(small, num_partitions)
+        )
         # round N materialized -> round N-1's pinned blocks are dead; free
         # them deterministically instead of waiting for driver GC
         new_blocks = _checkpoint_blocks(g_new)
@@ -240,13 +354,18 @@ def _cc_loop_inner(
             break
         sig_old = sig_new
 
-    # After convergence the residual graph is a union of stars:
-    # label = min(u, N(u)); frozen components carry their root label.
-    labels = (
-        g.groupBy("u")
-        .agg(F.min("v").alias("c"))
-        .select("u", F.least("u", "c").alias("c"))
-    )
+    if labels is None:
+        # After convergence the residual graph is a union of stars:
+        # label = min(u, N(u)).
+        labels = (
+            g.groupBy("u")
+            .agg(F.min("v").alias("c"))
+            .select("u", F.least("u", "c").alias("c"))
+        )
+    elif not frozen_parts:
+        _unpersist_blocks(g_blocks)
+        return labels
+    # frozen components carry their root label
     for fp in frozen_parts:
         labels = labels.unionByName(fp)
     # Materialize the final labels ONCE (they are |nodes| rows — compact),
@@ -269,13 +388,23 @@ def connected_components(
     max_iter: int = 50,
     freeze_stars: bool = True,
     ordered_ids: bool = False,
-    freeze_min_edges: int = 1_000_000,
 ) -> DataFrame:
-    """-> (node string, component string); component = min node name in the
-    cluster, so output is deterministic regardless of hash values.
-    Self-edges tolerated (define isolated nodes).
+    """-> (node, component); component = min node name in the cluster, so
+    output is deterministic regardless of hash values. Self-edges tolerated
+    (define isolated nodes); an edge with a null endpoint links nothing.
 
-    Session-wide side effect: while the loop runs,
+    The driver-finish gate's budget is the session's
+    ``spark.sql.autoBroadcastJoinThreshold`` (-1 or 0 = never). Under a
+    positive budget the (u, v) edges are first pinned by ONE localCheckpoint
+    whose observation sums their Arrow bytes. If they fit, the checkpoint is
+    pulled with toArrow and labelled by a numpy union-find on the driver —
+    no loop, no conf change. Otherwise the checkpoint is the loop's input,
+    so nothing upstream of ``edges`` is computed twice; the loop re-checks
+    the gate after every round from the round's observed edge bytes, so a
+    large graph still finishes on the driver once its frontier has shrunk
+    into the budget. Both paths give identical labels.
+
+    Session-wide side effect of the LOOP only: while it runs,
     ``spark.sql.constraintPropagation.enabled`` is disabled on the SHARED
     session conf (restored on exit) — required so localCheckpoint captures
     no origin constraints (see _cc_loop). A concurrent query on the same
@@ -283,23 +412,19 @@ def connected_components(
     (losing some inferred IsNotNull pushdowns, never correctness).
 
     freeze_stars (default on; tools/freeze_probe.py measures −40% wall at
-    3.6M and at 20.8M mixed edges, identical labels) is ADAPTIVE: it only
-    engages on rounds whose active edge count (free from the fused
-    signature) is ≥ freeze_min_edges — below that the extra per-round
-    joins + eager checkpoint cost more than they save (measured +55% on a
-    150k-edge star graph). Per-round frontier
-    reduction: a component is provably
-    finished when it is already a star rooted at its minimum: root r has
-    only larger neighbors, and every neighbor is a degree-1 leaf whose
-    single edge points at r. Such a component is self-contained (no node in
-    it has an edge outside), so its labels are final — emit them now and
-    drop its edges, and later rounds shuffle only the still-converging
-    frontier. On similarity graphs (near-dup clusters: mostly 2-5 node
-    components, a few long chains) the frontier collapses after round one
-    while the stock loop keeps re-shuffling the whole edge set every round.
-    The freeze test piggybacks on the aggregation large-star already needs
-    (min + count per node), so a round costs one extra small join, not an
-    extra pass over the edges.
+    3.6M and at 20.8M mixed edges, identical labels) is per-round frontier
+    reduction inside the loop: a component is provably finished when it
+    is already a star rooted at its minimum: root r has only larger
+    neighbors, and every neighbor is a degree-1 leaf whose single edge
+    points at r. Such a component is self-contained (no node in it has an
+    edge outside), so its labels are final — emit them now and drop its
+    edges, and later rounds shuffle only the still-converging frontier. On
+    similarity graphs (near-dup clusters: mostly 2-5 node components, a few
+    long chains) the frontier collapses after round one while the stock
+    loop keeps re-shuffling the whole edge set every round. The freeze test
+    piggybacks on the aggregation large-star already needs (min + count per
+    node), so a round costs one extra small join, not an extra pass over
+    the edges.
 
     ordered_ids=False (default): node names are hashed to longs up front
     with xxhash64 so strings never shuffle inside the loop; names are
@@ -314,29 +439,51 @@ def connected_components(
     loop shuffles carry full strings, so prefer the hashed form when the
     graph needs many rounds. In ordered mode, nodes whose every edge is a
     self-loop get no output row (no other node can reference them; callers
-    coalesce to identity)."""
+    coalesce to identity); hashed mode gives them a row of their own, and
+    a null name one (null, null) row. The driver path keeps both
+    contracts."""
+    spark = edges.sparkSession
+    budget = broadcast_budget(spark)
+    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    pinned = None
+    if budget:
+        node_type = (
+            e.select("u").unionByName(e.select(F.col("v").alias("u"))).schema[0].dataType
+        )
+        e = e.select(F.col("u").cast(node_type), F.col("v").cast(node_type))
+        e, m = _checkpoint_observed(e, b=F.sum(_row_bytes(e.schema)))
+        pinned = _checkpoint_blocks(e)
+        if (m["b"] or 0) <= budget:
+            labels = _driver_labels(
+                spark, e.toArrow(), node_type, ("node", "component"), not ordered_ids
+            )
+            _unpersist_blocks(pinned)
+            return labels
+
     if ordered_ids:
-        e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        labels = _cc_loop(e, num_partitions, max_iter, freeze_stars, freeze_min_edges)
+        # the loop's labels are its own checkpoint (or driver-built), so
+        # the pinned input is dead once it returns
+        labels = _cc_loop(e, num_partitions, max_iter, freeze_stars, budget)
+        _unpersist_blocks(pinned)
         return labels.select(
             F.col("u").alias("node"), F.col("c").alias("component")
         )
 
     nodes = (
-        edges.select(F.col(src).alias("name"))
-        .unionByName(edges.select(F.col(dst).alias("name")))
+        e.select(F.col("u").alias("name"))
+        .unionByName(e.select(F.col("v").alias("name")))
         .distinct()
         .withColumn("nid", F.xxhash64("name"))
         .cache()
     )
-    e = (
-        edges.select(F.col(src).alias("name"), F.col(dst).alias("dname"))
+    ids = (
+        e.select(F.col("u").alias("name"), F.col("v").alias("dname"))
         .join(nodes, "name")
         .select(F.col("nid").alias("u"), F.col("dname").alias("name"))
         .join(nodes, "name")
         .select("u", F.col("nid").alias("v"))
     )
-    labels = _cc_loop(e, num_partitions, max_iter, freeze_stars, freeze_min_edges)
+    labels = _cc_loop(ids, num_partitions, max_iter, freeze_stars, budget)
     all_nodes = nodes.select(F.col("nid").alias("u"))
     labels = all_nodes.join(labels, "u", "left").select(
         "u", F.coalesce("c", F.col("u")).alias("c")
@@ -346,6 +493,9 @@ def connected_components(
         nodes.select(F.col("nid").alias("u"), F.col("name").alias("node")), "u"
     ).select("node", "c")
     rep = named.groupBy("c").agg(F.min("node").alias("component"))
-    out = named.join(rep, "c").select("node", "component")
+    # materialize the |nodes|-row result while the node table is still
+    # cached, then release the cache and the pinned input
+    out = named.join(rep, "c").select("node", "component").localCheckpoint()
     nodes.unpersist()
+    _unpersist_blocks(pinned)
     return out

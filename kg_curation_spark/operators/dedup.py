@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import normalize_text, stable_hash32, tokenize, word_ngrams
+from ..session import broadcast_budget, estimated_row_bytes
 from .spread import ensure_parallelism as _spread
 
 
@@ -427,6 +428,9 @@ def ngram_jaccard_pairs(
         and st["mn"] >= 0
         and st["mx"] < (1 << 31)
     )
+    # Both broadcast gates below share the session's one byte budget,
+    # estimated from the stats action's row counts at Spark's per-row size.
+    budget = broadcast_budget(shingles.sparkSession)
     # df = 1 shingles cannot produce a pair — prune them from the JOIN
     # sides only (sizes above already counted them, matching the oracle's
     # per-doc n). The prune is a broadcast semi-join against the pairable
@@ -435,7 +439,10 @@ def ngram_jaccard_pairs(
     # itself is data-scaled skip it and feed the self-join unpruned (df=1
     # rows emit nothing there — they only cost build/probe work).
     idx = shingles
-    if st["n_pairable"] is not None and st["n_pairable"] <= 4_000_000 and (
+    if st["n_pairable"] is not None and (
+        st["n_pairable"] * estimated_row_bytes(shingles.select("shingle").schema)
+        <= budget
+    ) and (
         (st["surviving_rows"] or 0) > 1.25 * (st["pairable_rows"] or 0)
     ):
         pairable = dfreq.filter(pairable_c).select("shingle")
@@ -467,7 +474,9 @@ def ngram_jaccard_pairs(
     # probes (no shuffle). Above the budget — or for unbounded ids — the
     # sizes ride along as before (never a broadcast of a corpus-scaled
     # per-doc table).
-    sizes_post = pack and (st["mx"] - st["mn"] + 1) <= 4_000_000
+    sizes_post = pack and (
+        (st["mx"] - st["mn"] + 1) * estimated_row_bytes(sizes.schema) <= budget
+    )
     sized = idx if sizes_post else idx.join(sizes, "id")
     sized = sized.repartition(n_pair_parts, "shingle")
     if sizes_post:

@@ -13,6 +13,48 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+from pyspark.sql.types import StructType
+
+# Arrow/Spark fixed widths in bytes, by DataType.typeName(); variable-width
+# types (string, binary, nested) are absent.
+FIXED_WIDTH = {
+    "boolean": 1, "byte": 1, "short": 2, "integer": 4, "long": 8,
+    "float": 4, "double": 8, "date": 4, "timestamp": 8, "timestamp_ntz": 8,
+}
+
+
+def driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory``: $SPARK_DRIVER_MEM when set, else about 60%
+    of the host's MemTotal, capped at 48g, so the heap can never outgrow
+    the host (a 48g heap on a 15 GB host is OOM-killed by the kernel).
+    Falls back to 48g when MemTotal cannot be read."""
+    if os.environ.get("SPARK_DRIVER_MEM"):
+        return os.environ["SPARK_DRIVER_MEM"]
+    try:
+        with open(meminfo) as f:
+            kb = next(
+                int(line.split()[1]) for line in f if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "48g"
+    return f"{min(48 * 1024, kb * 6 // 10 // 1024)}m"
+
+
+def broadcast_budget(spark: SparkSession) -> int:
+    """The session's one broadcast byte budget, from
+    ``spark.sql.autoBroadcastJoinThreshold`` (parsed by Spark itself, so
+    "64MB"-style values work). Adaptive operator gates that pull a relation
+    to the driver or broadcast it compare their byte estimate to this;
+    0 means never (the conf's -1 and 0 both disable)."""
+    n = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    return max(0, int(n))
+
+
+def estimated_row_bytes(schema: StructType) -> int:
+    """Spark's own per-row size estimate (EstimationUtils.getSizePerRow):
+    8 bytes of row overhead plus each column's default size, 20 bytes for
+    a string or any other variable-width column."""
+    return 8 + sum(FIXED_WIDTH.get(f.dataType.typeName(), 20) for f in schema)
 
 
 def get_spark(
@@ -90,7 +132,7 @@ def get_spark(
             "spark.sql.adaptive.advisoryPartitionSizeInBytes",
             str(16 * 1024 * 1024),
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         # Throughput GC: G1's concurrent cycles collapse under 32 mutator
         # threads churning wide string rows (measured 3-5x slowdowns on
         # materialization-heavy stages in local mode); ParallelGC restores

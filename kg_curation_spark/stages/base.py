@@ -37,6 +37,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -68,7 +69,10 @@ def _footer_lineage(out: str) -> list[tuple[int, int]]:
 class ParquetDirSink:
     """Default sink: one partitioned-parquet directory per stage under the
     workdir. The atomic marker rename in PipelineContext.stage is the
-    snapshot-commit stand-in."""
+    snapshot-commit stand-in. Reads use the schema recorded in the marker:
+    no schema-inference job, and a stage with 0 rows (a partitioned write
+    then leaves no data file) reads back as an empty table instead of
+    failing with UNABLE_TO_INFER_SCHEMA."""
 
     def write(self, ctx: "PipelineContext", name: str, df: DataFrame,
               partition_by: list[str] | None) -> None:
@@ -78,7 +82,11 @@ class ParquetDirSink:
         writer.parquet(os.path.join(ctx.workdir, name))
 
     def read(self, ctx: "PipelineContext", name: str) -> DataFrame:
-        return ctx.spark.read.parquet(os.path.join(ctx.workdir, name))
+        reader = ctx.spark.read
+        schema = ctx.committed_schema(name)
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(os.path.join(ctx.workdir, name))
 
     def data_dir(self, ctx: "PipelineContext", name: str) -> str | None:
         return os.path.join(ctx.workdir, name)
@@ -173,6 +181,13 @@ class PipelineContext:
         out = os.path.join(self.workdir, name)
         return out, os.path.join(self.workdir, f"_{name}.COMMITTED")
 
+    def committed_schema(self, name: str) -> StructType | None:
+        """The schema stage ``name`` was written with, from its commit
+        marker; None for a marker written without one (inference then)."""
+        with open(self._paths(name)[1]) as f:
+            js = json.load(f).get("schema")
+        return StructType.fromJson(json.loads(js)) if js else None
+
     def stage(
         self,
         name: str,
@@ -225,11 +240,21 @@ class PipelineContext:
             os.path.join(lin_dir, f"{name}.parquet"),  # overwrite per stage
         )
 
+        # the read-back layout: partition columns move to the end, as a
+        # partitioned parquet read places them
+        parts = set(partition_by or ())
+        schema = StructType(
+            [f for f in df.schema if f.name not in parts]
+            + [f for f in df.schema if f.name in parts]
+        )
         wall = time.time() - t0
         tmp = marker + ".tmp"
         with open(tmp, "w") as f:
             json.dump(
-                {"stage": name, "rows_out": rows, "wall_s": wall, "run_id": self.run_id},
+                {
+                    "stage": name, "rows_out": rows, "wall_s": wall,
+                    "run_id": self.run_id, "schema": schema.json(),
+                },
                 f,
             )
         os.replace(tmp, marker)  # atomic commit — resume boundary

@@ -7,16 +7,18 @@ Two parts, per SURVEY.md §4 and the north star stage (3):
                     no loop needed.
   canonicalize      unbounded connected components over a similarity graph
                     (redirect edges ∪ same-label edges ∪ decided-correction
-                    co-reference edges) -> canonical id per entity, via the
-                    salted large-star/small-star loop (operators/components).
+                    co-reference edges) -> canonical id per entity, via
+                    operators/components: a driver-side union-find when the
+                    edge set fits the session's broadcast byte budget, the
+                    large-star/small-star loop above it.
 
-The components input is explicitly repartitioned before the loop (north
-rule); hot entities are defused inside the algorithm (see components.py).
+Above the budget the loop's input is explicitly repartitioned (north rule)
+and hot entities are defused inside the algorithm (see components.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import normalize_text
@@ -48,22 +50,24 @@ def similarity_edges(
     entity_label: DataFrame, redirects: DataFrame
 ) -> DataFrame:
     """Edges for clustering: redirect pairs + entities sharing a normalized
-    label (blocking key = label, so the self-join is an equi-join; a label
-    shared by a hot entity set is bounded by the per-label group size)."""
-    # identity redirects are clustering no-ops — drop them before the
-    # union so the final distinct shuffles only real edges
+    label (blocking key = label; a label shared by a hot entity set is
+    bounded by the per-label group size). An edge may repeat —
+    connected_components deduplicates inside its loop and the driver
+    union-find ignores repeats — so no vocabulary-scale distinct."""
     red = redirects.select(
         F.col("entity").alias("src"), F.col("equivalent").alias("dst")
-    ).filter(F.col("src") != F.col("dst"))
-    # no pre-distinct on (entity, lab): min() tolerates duplicates and the
-    # final edge distinct dedups — a pre-distinct would be one more
-    # vocabulary-scale shuffle
-    lab = entity_label.select("entity", normalize_text("label").alias("lab"))
+    )
     # connect every entity of a label group to the group's min entity —
-    # star edges, |group| rows, instead of a quadratic self-join
-    rep = lab.groupBy("lab").agg(F.min("entity").alias("dst"))
-    same_label = lab.join(rep, "lab").select(F.col("entity").alias("src"), "dst")
-    return red.unionByName(same_label).filter(F.col("src") != F.col("dst")).distinct()
+    # star edges, |group| rows, instead of a quadratic self-join. The min
+    # is a window over one label-keyed exchange (a groupBy + join back
+    # would shuffle twice); null labels form no group.
+    lab = entity_label.select("entity", normalize_text("label").alias("lab"))
+    same_label = lab.filter(F.col("lab").isNotNull()).select(
+        F.col("entity").alias("src"),
+        F.min("entity").over(Window.partitionBy("lab")).alias("dst"),
+    )
+    # self-edges (identity redirects, group reps) are clustering no-ops
+    return red.unionByName(same_label).filter(F.col("src") != F.col("dst"))
 
 
 def canonicalize(
@@ -71,14 +75,20 @@ def canonicalize(
 ) -> DataFrame:
     """-> (node, component): canonical cluster id per entity.
 
-    Runs connected_components in ordered-ids mode: entity URIs are already
-    totally ordered (lexicographically), so the loop runs directly on the
-    names and its min IS the deterministic min-name label. That removes
-    the two vocabulary-scale hash joins at init and the name-join +
-    rep-groupBy + rep-join at assembly that dominated this stage at 32M
-    quads (the similarity graph is star-dominated — label groups and
-    redirect alias pairs — so star-freezing leaves only ~1 heavy loop
-    round, and the narrow-hashed-id trade-off no longer pays).
+    Runs connected_components in ordered-ids mode under its one adaptive
+    gate: when the similarity edges fit the session's broadcast byte
+    budget (``spark.sql.autoBroadcastJoinThreshold``) they are pulled by
+    one bounded Arrow collect and labelled by a union-find on the driver,
+    and the session's constraint-propagation conf is never touched.
+    Larger graphs run the loop until a round's frontier fits the budget,
+    then finish the same way. Entity URIs are totally ordered
+    (lexicographically), so the loop runs directly on the names and its
+    min IS the deterministic min-name label. That removes the two
+    vocabulary-scale hash joins at init and the name-join + rep-groupBy +
+    rep-join at assembly that dominated this stage at 32M quads (the
+    similarity graph is star-dominated — label groups and redirect alias
+    pairs — so star-freezing leaves only ~1 heavy loop round, and the
+    narrow-hashed-id trade-off no longer pays).
 
     Entities absent from the graph (no same-label peer, no redirect) have
     no row; apply_canonical coalesces them to themselves.

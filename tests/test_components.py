@@ -1,20 +1,74 @@
-"""Connected components: correctness on known graphs + determinism."""
+"""Connected components: correctness on known graphs + determinism.
+
+Every graph runs through both branches of the driver-finish gate: a
+broadcast threshold of -1 forces the large-star/small-star loop, the
+session default finishes on the driver. Labels must be identical."""
 
 from __future__ import annotations
 
+import contextlib
+import random
+
 import pyspark.sql.functions as F
 
+from kg_curation_spark.operators import components
 from kg_curation_spark.operators.components import connected_components
 
 
-def _run(spark, edges, **kw):
-    df = spark.createDataFrame(edges, "src string, dst string")
+@contextlib.contextmanager
+def _broadcast_threshold(spark, value):
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+def _run(spark, edges, schema="src string, dst string", **kw):
+    df = spark.createDataFrame(edges, schema)
     out = connected_components(df, num_partitions=8, **kw)
     return {r["node"]: r["component"] for r in out.collect()}
 
 
+def _run_loop(spark, edges, **kw):
+    """Labels from the loop alone: no budget, so no driver finish."""
+    with _broadcast_threshold(spark, "-1"):
+        return _run(spark, edges, **kw)
+
+
+def _run_both(spark, edges, **kw):
+    """Labels from the loop and from the driver finish; they must agree."""
+    loop = _run_loop(spark, edges, **kw)
+    driver = _run(spark, edges, **kw)
+    assert loop == driver
+    return driver
+
+
+def _ref_labels(edges, keep_isolated):
+    """Plain-Python union-find reference: node -> smallest node name."""
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, v in edges:
+        if u is None or v is None or (u == v and not keep_isolated):
+            continue
+        for x in (u, v):
+            parent.setdefault(x, x)
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    return {x: find(x) for x in parent}
+
+
 def test_two_chains_and_isolate(spark):
-    comp = _run(
+    comp = _run_both(
         spark,
         [("a", "b"), ("b", "c"), ("x", "y"), ("z", "z")],
     )
@@ -26,7 +80,7 @@ def test_two_chains_and_isolate(spark):
 def test_long_path_converges(spark):
     # path of 40 nodes — stresses the O(log n) round bound
     edges = [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(40)]
-    comp = _run(spark, edges)
+    comp = _run_both(spark, edges)
     assert set(comp.values()) == {"n00"}
     assert len(comp) == 41
 
@@ -34,12 +88,12 @@ def test_long_path_converges(spark):
 def test_star_hub(spark):
     # hot hub: one node connected to 200 leaves (large-star case)
     edges = [("hub", f"leaf{i:03d}") for i in range(200)]
-    comp = _run(spark, edges)
+    comp = _run_both(spark, edges)
     assert set(comp.values()) == {"hub"}
 
 
 def test_component_rep_is_min_name(spark):
-    comp = _run(spark, [("q", "m"), ("m", "b"), ("q", "z")])
+    comp = _run_both(spark, [("q", "m"), ("m", "b"), ("q", "z")])
     assert set(comp.values()) == {"b"}
 
 
@@ -57,11 +111,12 @@ def test_freeze_stars_equivalent_on_mixed_graph(spark):
     edges += [(f"s{i // 4}hub", f"s{i // 4}l{i % 4}") for i in range(40)]  # stars
     edges += [(f"c{i:02d}", f"c{i + 1:02d}") for i in range(30)]  # chain
     edges += [("bighub", f"bh{i:03d}") for i in range(100)]  # hub
-    base = _run(spark, edges, freeze_stars=False)
-    # freeze_min_edges=0 forces the freeze path — the adaptive gate would
-    # otherwise skip it at test scale (it only pays above ~1M active edges)
-    frozen = _run(spark, edges, freeze_stars=True, freeze_min_edges=0)
+    base = _run_loop(spark, edges, freeze_stars=False)
+    # no budget keeps the graph in the loop, where every round runs the
+    # freeze test — the default budget would finish it on the driver
+    frozen = _run_loop(spark, edges, freeze_stars=True)
     assert frozen == base
+    assert _run(spark, edges) == base
 
 
 def test_freeze_stars_random_graphs_equivalent(spark):
@@ -76,10 +131,12 @@ def test_freeze_stars_random_graphs_equivalent(spark):
             (f"v{rng.randrange(n):03d}", f"v{rng.randrange(n):03d}")
             for _ in range(320)
         ]
-        base = _run(spark, edges, freeze_stars=False)
-        frozen = _run(spark, edges, freeze_stars=True, freeze_min_edges=0)
+        base = _run_loop(spark, edges, freeze_stars=False)
+        frozen = _run_loop(spark, edges, freeze_stars=True)
         assert frozen == base, f"seed {seed}"
-        ordered = _run(spark, edges, ordered_ids=True, freeze_min_edges=0)
+        assert _run(spark, edges) == base, f"seed {seed}"
+        assert base == _ref_labels(edges, keep_isolated=True), f"seed {seed}"
+        ordered = _run_both(spark, edges, ordered_ids=True)
         # ordered mode omits self-loop-only nodes (documented contract)
         iso = {n for n, c in base.items() if c == n and n not in ordered}
         assert {n: c for n, c in base.items() if n not in iso} == ordered, seed
@@ -108,6 +165,8 @@ def test_canonicalize_ordered_mode_equals_hashed_cc(spark):
             ("s1", "solo"),
             # group "delta" merged to alpha via redirect below
             ("d1", "delta"), ("d2", "Delta"),
+            # null labels form no group
+            ("n1", None), ("n2", None),
         ],
         "entity string, label string",
     )
@@ -124,9 +183,15 @@ def test_canonicalize_ordered_mode_equals_hashed_cc(spark):
         similarity_edges(entity_label, redirects), "src", "dst",
         num_partitions=8, ordered_ids=False,
     )
-    ordered = canonicalize(entity_label, redirects, num_partitions=8)
     flat_m = {r["node"]: r["component"] for r in flat.collect()}
-    got_m = {r["node"]: r["component"] for r in ordered.collect()}
+    # canonicalize takes the session budget: -1 forces the loop
+    got = {}
+    for branch, threshold in (("loop", "-1"), ("driver", str(64 << 20))):
+        with _broadcast_threshold(spark, threshold):
+            ordered = canonicalize(entity_label, redirects, num_partitions=8)
+            got[branch] = {r["node"]: r["component"] for r in ordered.collect()}
+    assert got["loop"] == got["driver"]
+    got_m = got["driver"]
     # ordered-ids mode must agree with the hashed+min-name-rep form exactly
     assert got_m == flat_m
     # spot checks: delta merged into alpha through the unlabeled chain
@@ -136,3 +201,106 @@ def test_canonicalize_ordered_mode_equals_hashed_cc(spark):
     # singleton label group: no edge, no row — apply_canonical
     # coalesces it to itself downstream
     assert "s1" not in got_m
+    assert "n1" not in got_m and "n2" not in got_m
+
+
+def test_many_small_clusters_int64(spark):
+    """The near-dup pair graph's shape: int64 document ids, mostly pairs
+    and triples, a few chains, many ids in no pair at all."""
+    rng = random.Random(5)
+    edges = []
+    doc = 0
+    for _ in range(150):
+        size = rng.choice([2, 2, 2, 3, 3, 4, 8])
+        ids = list(range(doc, doc + size))
+        rng.shuffle(ids)
+        edges += [(ids[i], ids[i + 1]) for i in range(size - 1)]
+        doc += size + rng.randrange(3)
+    edges += [(b, a) for a, b in edges[::7]]  # both directions, duplicates
+    comp = _run_both(spark, edges, schema="src long, dst long")
+    assert comp == _ref_labels(edges, keep_isolated=True)
+    assert len(set(comp.values())) == 150
+
+
+def test_non_ascii_names_order_like_spark(spark):
+    """The min-name label must follow Spark's string order (UTF-8 bytes),
+    which the driver path gets from Arrow's sort of the names. U+FFEF vs
+    U+1D518 is where UTF-16 code-unit order (Java's String.compareTo)
+    would disagree."""
+    edges = [
+        ("\uffef", "\U0001d518"), ("\U0001d518", "zeta"),
+        ("é", "e\u0301"), ("e\u0301", "Ä"),
+        ("日本", "中文"), ("中文", "ß"),
+        ("A", "a"),
+    ]
+    for ordered in (False, True):
+        comp = _run_both(spark, edges, ordered_ids=ordered)
+        assert comp == _ref_labels(edges, keep_isolated=True)
+    assert comp["\U0001d518"] == "zeta"
+    assert comp["\uffef"] == "zeta"
+
+
+def test_null_endpoints_and_self_loops(spark):
+    """An edge with a null endpoint links nothing. Hashed mode keeps a row
+    for every name seen (a null name gets (null, null)); ordered mode only
+    for endpoints of non-self-loop edges."""
+    edges = [("a", "b"), ("b", None), (None, "c"), ("z", "z"), ("q", "q"),
+             ("q", "r"), (None, None)]
+    hashed = _run_both(spark, edges)
+    assert hashed == {"a": "a", "b": "a", "c": "c", "q": "q", "r": "q",
+                      "z": "z", None: None}
+    ordered = _run_both(spark, edges, ordered_ids=True)
+    assert ordered == {"a": "a", "b": "a", "q": "q", "r": "q"}
+
+
+def test_loop_rounds_then_driver_finish(spark, monkeypatch):
+    """A budget below the input's size but above the residual's: the loop
+    runs at least one round (freezing the isolated pairs), then the
+    collapsed clique finishes on the driver, unioned with the frozen
+    part."""
+    clique = [(f"c{i:02d}", f"c{j:02d}") for i in range(20) for j in range(i + 1, 20)]
+    pairs = [(f"p{i}a", f"p{i}b") for i in range(10)]
+    edges = clique + pairs
+    calls = {"sym": 0, "driver": []}
+    sym, drv = components._sym_dedup_by_u, components._driver_labels
+
+    def count_sym(*a, **kw):
+        calls["sym"] += 1
+        return sym(*a, **kw)
+
+    def record_driver(spark_, t, dtype, names, keep_isolated):
+        calls["driver"].append(names)
+        return drv(spark_, t, dtype, names, keep_isolated)
+
+    monkeypatch.setattr(components, "_sym_dedup_by_u", count_sym)
+    monkeypatch.setattr(components, "_driver_labels", record_driver)
+    for ordered in (False, True):
+        calls["sym"], calls["driver"] = 0, []
+        with _broadcast_threshold(spark, "1000"):
+            comp = _run(spark, edges, ordered_ids=ordered)
+        assert calls["sym"] >= 3  # initial symmetrize + at least one round
+        assert calls["driver"] == [("u", "c")]  # finished mid-loop
+        assert comp == _ref_labels(edges, keep_isolated=True)
+
+
+def test_driver_path_leaves_constraint_conf_unchanged(spark, monkeypatch):
+    """Only the loop flips spark.sql.constraintPropagation.enabled; the
+    driver path must not write it at all."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    key = "spark.sql.constraintPropagation.enabled"
+    writes = []
+    orig_set = RuntimeConfig.set
+
+    def spy(self, k, v):
+        if k == key:
+            writes.append(v)
+        return orig_set(self, k, v)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+    edges = [("a", "b"), ("b", "c"), ("x", "y")]
+    for ordered in (False, True):
+        _run(spark, edges, ordered_ids=ordered)
+    assert writes == []
+    _run_loop(spark, edges)
+    assert writes == ["false", "true"]

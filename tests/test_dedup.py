@@ -137,3 +137,35 @@ def test_ngram_jaccard_string_ids_match_packed_path(spark):
         ).collect()
     }
     assert by_int == by_str and by_int
+
+
+def test_ngram_jaccard_broadcast_gates_fall_back_to_shuffle(spark):
+    """Both broadcast gates of ngram_jaccard_pairs (the df>=2 vocabulary
+    prune and the post-aggregate size probes) read the session's byte
+    budget: at the default they broadcast, at -1 both take their shuffle
+    fallbacks — with identical scores."""
+    from kg_curation_spark.operators.dedup import shingle_table
+
+    rows = [(i, " ".join(f"w{i}x{j}" for j in range(12)) + " shared words here")
+            for i in range(40)]
+    rows += [(100 + i, rows[i][1] + " tail") for i in range(0, 40, 5)]
+    docs = spark.createDataFrame(rows, "doc_id int, text string")
+    sh = shingle_table(docs, "doc_id", "text", k=3)
+
+    def run():
+        out = ngram_jaccard_pairs(sh, tau=0.2, max_shingle_df=None)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        return {(r["id_a"], r["id_b"]): r["jaccard"] for r in out.collect()}, plan
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    try:
+        got, plan = run()
+        spark.conf.set(key, "-1")
+        fallback, fb_plan = run()
+    finally:
+        spark.conf.set(key, prev)
+    assert "BroadcastExchange" in plan
+    assert "BroadcastExchange" not in fb_plan
+    assert got == fallback
+    assert {(i, 100 + i) for i in range(0, 40, 5)} <= set(got)

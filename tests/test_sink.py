@@ -92,3 +92,68 @@ def test_catalog_sink_transient_failure_preserves_snapshot(spark, tmp_path):
         assert type(spark.range(1)).writeTo is real_writeTo
     finally:
         spark.sql("DROP TABLE IF EXISTS kgsink_fail_t")
+
+
+def test_parquet_sink_empty_stage_materializes_and_resumes(spark, tmp_path):
+    """The default sink reads each stage back with the schema it was
+    written with (recorded in the commit marker): a partitioned stage with
+    0 rows — its write leaves no data file — reads back as an empty table
+    instead of failing schema inference, through a fresh run and a resume,
+    with the same column order as a non-empty partitioned read-back."""
+    import json
+
+    wd = str(tmp_path)
+
+    def run():
+        ctx = PipelineContext(spark=spark, workdir=wd)
+        decided = ctx.stage(
+            "decide",
+            lambda: spark.range(10).select(
+                F.col("id").alias("subject"),
+                (F.col("id") % 3).cast("string").alias("predicate"),
+                (F.col("id") * 0.5).alias("score"),
+            ).filter(F.col("score") > 100),
+        )
+        full = ctx.stage(
+            "full",
+            lambda: spark.range(6).select(
+                F.col("id").alias("subject"),
+                (F.col("id") % 3).cast("string").alias("predicate"),
+                (F.col("id") * 0.5).alias("score"),
+            ),
+            partition_by=["predicate"],
+        )
+        mat = ctx.stage(
+            "materialize", lambda: decided.select("subject", "predicate", "score"),
+            partition_by=["predicate"],
+        )
+        return ctx, full, mat
+
+    ctx, full, mat = run()
+    assert [r.resumed for r in ctx.ran] == [False, False, False]
+    assert mat.count() == 0 and ctx.ran[-1].rows_out == 0
+    inferred = spark.read.parquet(f"{wd}/full")
+    assert full.columns == inferred.columns == ["subject", "score", "predicate"]
+    assert mat.schema == full.schema
+    assert dict(full.dtypes)["predicate"] == "string"
+
+    ctx2, full2, mat2 = run()
+    assert [r.resumed for r in ctx2.ran] == [True, True, True]
+    assert mat2.count() == 0 and mat2.schema == mat.schema
+    assert sorted(full2.collect()) == sorted(full.collect())
+
+    # a marker written without a schema falls back to inference
+    marker = f"{wd}/_full.COMMITTED"
+    with open(marker) as f:
+        meta = json.load(f)
+    del meta["schema"]
+    with open(marker, "w") as f:
+        json.dump(meta, f)
+    ctx3 = PipelineContext(spark=spark, workdir=wd)
+    assert ctx3.committed_schema("full") is None
+    legacy = ctx3.sink.read(ctx3, "full")
+    # inference reads the numeric-looking string partition values as ints
+    assert dict(legacy.dtypes)["predicate"] == "int"
+    assert sorted((r[0], r[1], str(r[2])) for r in legacy.collect()) == sorted(
+        full.collect()
+    )

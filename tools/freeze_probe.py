@@ -1,10 +1,12 @@
-"""Re-measure the adaptive star-freeze threshold in connected_components.
+"""Measure connected_components' star freeze and its driver finish.
 
-The freeze gate (operators/components.py, freeze_min_edges) trades ~4
-extra small shuffles + an anti-join per round against shrinking the
-frontier; the per-round cost changed when the frozen parts became EAGER
-localCheckpoints (one extra small job per freezing round), so the
-calibration numbers must be re-taken on the fixed code.
+Inside the loop the freeze (operators/components.py, freeze_stars) trades
+~4 extra small shuffles + an anti-join + one eager localCheckpoint job per
+round against shrinking the frontier. The loop variants run with
+spark.sql.autoBroadcastJoinThreshold=-1, so no round finishes on the
+driver; the "driver" variant runs with the session's broadcast budget,
+i.e. what callers get by default (a numpy union-find on the driver once
+the edges, or a later round's frontier, fit the budget).
 
 Deterministic synthetic graphs (no external data, no RNG):
   * star-only: n/4 components of 4 leaves — the freeze's worst case
@@ -63,12 +65,22 @@ def mixed_graph(spark, n_edges: int):
     )
 
 
-def time_cc(edges, **kw) -> tuple[float, int]:
+def time_cc(edges, threshold: str | None, **kw) -> tuple[float, int]:
+    """Wall seconds and label rows of one run; threshold overrides the
+    broadcast budget for it (None keeps the session's)."""
     from kg_curation_spark.operators.components import connected_components
 
-    t0 = time.time()
-    n = connected_components(edges, num_partitions=32, **kw).count()
-    return time.time() - t0, n
+    conf = edges.sparkSession.conf
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = conf.get(key)
+    if threshold is not None:
+        conf.set(key, threshold)
+    try:
+        t0 = time.time()
+        n = connected_components(edges, num_partitions=32, **kw).count()
+        return time.time() - t0, n
+    finally:
+        conf.set(key, prev)
 
 
 def main() -> None:
@@ -84,11 +96,12 @@ def main() -> None:
         edges = (star_graph if graph == "star" else mixed_graph)(spark, n_edges)
         edges = edges.localCheckpoint()  # exclude generation from timings
         row = {"graph": graph, "edges": n_edges}
-        for variant, kw in [
-            ("freeze", {"freeze_stars": True, "freeze_min_edges": 0}),
-            ("no_freeze", {"freeze_stars": False}),
+        for variant, threshold, kw in [
+            ("freeze", "-1", {"freeze_stars": True}),
+            ("no_freeze", "-1", {"freeze_stars": False}),
+            ("driver", None, {}),
         ]:
-            wall, rows = time_cc(edges, **kw)
+            wall, rows = time_cc(edges, threshold, **kw)
             row[variant] = round(wall, 2)
             row[f"{variant}_rows"] = rows
             print(
@@ -96,7 +109,7 @@ def main() -> None:
                             "wall_s": round(wall, 2), "label_rows": rows}),
                 flush=True,
             )
-        assert row["freeze_rows"] == row["no_freeze_rows"], row
+        assert row["freeze_rows"] == row["no_freeze_rows"] == row["driver_rows"], row
         row["freeze_vs_stock"] = round(row["freeze"] / row["no_freeze"], 2)
         results.append(row)
     print(json.dumps({"summary": results}))
