@@ -100,12 +100,9 @@ def _linkfeat_sparse_only(spark, sf_dir):
 
 
 def _cc_star_adaptive(spark, sf_dir):
-    """Bench override: the registry's row pins freeze_min_edges=0 so the
-    star-freeze path is oracle-checked every round (it would otherwise
-    only engage >=1M active edges and go dark at test scale). Forcing the
-    freeze on this small graph pays ~4 extra small shuffles + an eager
-    checkpoint per round — the bench times the ADAPTIVE default, i.e.
-    what canonicalize actually runs."""
+    """Bench override: the components call canonicalize makes, under the
+    session's broadcast budget (the graph finishes on the driver when its
+    edges fit it, else runs the large-star/small-star loop)."""
     from pyspark.sql import functions as F
 
     from kg_curation_spark.operators.components import connected_components
@@ -115,7 +112,7 @@ def _cc_star_adaptive(spark, sf_dir):
     edges = c.join(n, c.c_nationkey == n.n_nationkey).select(
         F.col("c_name").alias("src"), F.col("n_name").alias("dst")
     )
-    return connected_components(edges, num_partitions=16, ordered_ids=True)
+    return connected_components(edges)
 
 
 def _simhash_arrow_only(spark, sf_dir):

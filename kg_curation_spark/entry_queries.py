@@ -996,12 +996,12 @@ def connected_components_star_query(spark, sf_dir):
     edges = c.join(n, c.c_nationkey == n.n_nationkey).select(
         F.col("c_name").alias("src"), F.col("n_name").alias("dst")
     )
-    # labels ARE the node names -> ordered-ids mode: no hash joins at
-    # init, no name-join/rep assembly; with no self-loops in this graph
-    # the output row set is identical. At this size the graph finishes on
-    # the driver; tests/test_components_oracle.py also checks this row
-    # with the budget disabled, through the loop and its star freeze.
-    return connected_components(edges, num_partitions=16, ordered_ids=True)
+    # the labels are the min node names themselves; this graph has no
+    # self-loops, so every endpoint gets a row. At this size the graph
+    # finishes on the driver; tests/test_components_oracle.py also checks
+    # this row with the budget disabled, through the loop and its star
+    # freeze.
+    return connected_components(edges)
 
 
 @q(
@@ -1040,9 +1040,9 @@ def neardup_clusters_query(spark, sf_dir):
         F.lpad(F.col("id_a").cast("string"), 6, "0").alias("src"),
         F.lpad(F.col("id_b").cast("string"), 6, "0").alias("dst"),
     )
-    # zero-padded ids: lexical order == numeric order, so ordered-ids mode
-    # yields the same min-id cluster labels without the hash-id round-trip
-    return connected_components(edges, num_partitions=8, ordered_ids=True)
+    # zero-padded ids: lexical order == numeric order, so the min-name
+    # label is the min doc id
+    return connected_components(edges)
 
 
 @q(

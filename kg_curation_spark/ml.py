@@ -203,6 +203,9 @@ def train_plausibility_weights(
         from .stages.score import MODEL_W
 
         return MODEL_W.copy()  # degenerate corpus: keep the shipped prior
+    # toPandas row order follows task timing and the fit's float sums are
+    # order-sensitive, so sort the rows: same data -> same weights
+    train = train.sort_values([*MODEL_FEATURES, "label"], ignore_index=True)
     x = train[MODEL_FEATURES].to_numpy(dtype="float64")
     y = train["label"].to_numpy(dtype="float64")
     return fit_logistic(x, y, l2=l2)

@@ -1,35 +1,38 @@
 """Connected components over an edge DataFrame.
 
 Used by the canonicalize stage (similarity/redirect edges -> canonical
-cluster id per entity) and the near-dup clustering queries. Output label =
-the smallest node name of the component, on either of two paths chosen by
-ONE adaptive gate on the session's broadcast byte budget
-(``spark.sql.autoBroadcastJoinThreshold``, read by
-``session.broadcast_budget``):
+cluster id per entity) and the near-dup clustering queries. Output
+(node, component), both in the common type of the two endpoint columns;
+component = the smallest node of the cluster in Spark's order (numeric for
+integers, UTF-8 byte order for strings). A node whose every edge is a
+self-loop gets no row, and an edge with a null endpoint links nothing;
+callers coalesce absent nodes to themselves.
+
+Both paths run on the nodes themselves — the algorithm only needs a total
+order, so no id table or name join-back exists — and ONE adaptive gate on
+the session's broadcast byte budget (``spark.sql.autoBroadcastJoinThreshold``,
+read by ``session.broadcast_budget``) chooses between them:
 
   * driver finish — when the active edge set fits the budget, it is pulled
     with toArrow from a pinned checkpoint and labelled on the driver by a
     numpy union-find (min-hooking + pointer jumping); the labels return
     through an Arrow ``createDataFrame``. The gate has one measure, the
     Arrow bytes of the edges summed by an Observation on a localCheckpoint
-    (``_row_bytes``): at entry that checkpoint pins the input edges (before
-    any hash table or symmetrize), after every loop round it is the round's
-    own checkpoint. An input above the budget is therefore never computed
-    twice — its pinned checkpoint feeds the loop — and a graph of a few
-    hundred edges costs two small jobs instead of a checkpoint job plus
-    exchanges per round.
+    (``_row_bytes``): at entry that checkpoint pins the input edges, after
+    every loop round it is the round's own checkpoint. An input above the
+    budget is therefore never computed twice — its pinned checkpoint feeds
+    the loop — and a graph of a few hundred edges costs two small jobs
+    instead of a checkpoint job plus exchanges per round.
   * the large-star/small-star loop (Kiveris et al., "Connected Components
     in MapReduce and Beyond", SoCC'14; Catalyst has no iterative operator,
     SURVEY.md §4) for edge sets above the budget:
-      - two id modes: by default node names are hashed to longs up front
-        with ``xxhash64`` so strings never shuffle inside the loop (names
-        joined back once at the end); ``ordered_ids=True`` runs the loop
-        DIRECTLY on the names — the algorithm only needs a total order;
-        either way no global-ordering window — nothing funnels to one task;
-      - explicit ``repartition(num, 'u')`` before the loop (north rule);
+      - no global-ordering window — nothing funnels to one task;
+      - explicit ``repartition(spark.sql.shuffle.partitions, 'u')`` before
+        the loop (north rule);
       - ``localCheckpoint`` each round truncates lineage so round N's plan
         does not replay rounds 1..N-1;
-      - convergence = no edge changed; bounded O(log n) rounds;
+      - convergence = no edge changed; bounded O(log n) rounds
+        (``MAX_ITER`` caps them);
       - hot hubs (a node with millions of neighbors) are exactly the
         large-star case — their edges route to the minimum neighbor instead
         of repeatedly funnelling through one reducer.
@@ -49,6 +52,9 @@ from pyspark.sql.types import DataType, StructField, StructType
 from ..session import FIXED_WIDTH, broadcast_budget
 
 _obs_seq = itertools.count()
+
+# Loop round cap: O(log n) rounds converge any graph this engine meets.
+MAX_ITER = 50
 
 
 def _sym_dedup_by_u(edges: DataFrame, num_partitions: int) -> DataFrame:
@@ -115,19 +121,12 @@ def _min_roots(n: int, a: np.ndarray, b: np.ndarray) -> np.ndarray:
 
 
 def _driver_labels(
-    spark: SparkSession,
-    t: pa.Table,
-    dtype: DataType,
-    names: tuple[str, str],
-    keep_isolated: bool,
+    spark: SparkSession, t: pa.Table, dtype: DataType, names: tuple[str, str]
 ) -> DataFrame:
     """Label the collected (u, v) edge table on the driver -> DataFrame
-    names = (node col, label col), both typed dtype: one row per node,
-    label = the smallest node of its component. An edge with a null
-    endpoint links nothing. keep_isolated=True (hashed mode's node set):
-    every non-null name seen gets a row, self-loop-only ones included, and
-    a null name gets one (null, null) row. keep_isolated=False (the loop's
-    node set): only endpoints of non-self-loop edges get rows.
+    names = (node col, label col), both typed dtype: one row per endpoint
+    of a non-self-loop edge, label = the smallest node of its component. An
+    edge with a null endpoint links nothing.
 
     The names are factorized to dense ids in Arrow's sort order (a
     dictionary encode plus a sort of the distinct names — 10x faster than
@@ -135,15 +134,11 @@ def _driver_labels(
     name: numeric order for integers, UTF-8 byte order for strings — the
     orders Spark compares in."""
     u, v = t.column(0), t.column(1)
-    arrow_type = t.schema.field(0).type
     link = pc.fill_null(pc.not_equal(u, v), False)
-    ends = [pc.filter(u, link), pc.filter(v, link)]
-    m = len(ends[0])
-    if keep_isolated:
-        rest = pc.invert(link)
-        ends += [pc.filter(u, rest).drop_null(), pc.filter(v, rest).drop_null()]
+    a, b = pc.filter(u, link), pc.filter(v, link)
+    m = len(a)
     flat = pa.chunked_array(
-        [c for x in ends for c in x.chunks], type=arrow_type
+        a.chunks + b.chunks, type=t.schema.field(0).type
     ).combine_chunks()
     enc = pc.dictionary_encode(flat)
     order = pc.array_sort_indices(enc.dictionary).to_numpy()
@@ -151,12 +146,8 @@ def _driver_labels(
     rank[order] = np.arange(len(order))
     idx = rank[enc.indices.to_numpy()]
     node_col = enc.dictionary.take(pa.array(order))
-    root = _min_roots(len(node_col), idx[:m], idx[m : 2 * m])
+    root = _min_roots(len(node_col), idx[:m], idx[m:])
     label_col = node_col.take(pa.array(root))
-    if keep_isolated and u.null_count + v.null_count:
-        null = pa.nulls(1, arrow_type)
-        node_col = pa.concat_arrays([node_col, null])
-        label_col = pa.concat_arrays([label_col, null])
     schema = StructType([StructField(names[0], dtype), StructField(names[1], dtype)])
     return spark.createDataFrame(
         pa.table({names[0]: node_col, names[1]: label_col}), schema=schema
@@ -167,19 +158,13 @@ def _driver_labels(
 # large-star/small-star loop
 
 
-def _cc_loop(
-    e: DataFrame,
-    num_partitions: int,
-    max_iter: int,
-    freeze_stars: bool,
-    budget: int,
-) -> DataFrame:
+def _cc_loop(e: DataFrame, freeze_stars: bool, budget: int) -> DataFrame:
     """Large-star/small-star fixpoint over (u, v) edges of ANY ordered
     type (longs or strings — the algorithm only needs a total order).
     -> (u, c): one row per node appearing in the symmetric graph,
-    c = minimum node id of its component. Self-loop-only nodes are absent
-    (callers decide whether isolated nodes need rows). Finishes on the
-    driver as soon as a round's edge set fits ``budget`` bytes.
+    c = minimum node of its component; self-loop-only nodes are absent.
+    Finishes on the driver as soon as a round's edge set fits ``budget``
+    bytes.
 
     Constraint propagation is disabled while the loop builds its
     checkpoints (restored on exit): ``localCheckpoint`` captures the source
@@ -196,7 +181,7 @@ def _cc_loop(
     conf_prev = spark.conf.get(_CONF, "true")
     spark.conf.set(_CONF, "false")
     try:
-        return _cc_loop_inner(e, num_partitions, max_iter, freeze_stars, budget)
+        return _cc_loop_inner(e, freeze_stars, budget)
     finally:
         spark.conf.set(_CONF, conf_prev)
 
@@ -224,14 +209,9 @@ def _unpersist_blocks(handle) -> None:
             pass
 
 
-def _cc_loop_inner(
-    e: DataFrame,
-    num_partitions: int,
-    max_iter: int,
-    freeze_stars: bool,
-    budget: int,
-) -> DataFrame:
+def _cc_loop_inner(e: DataFrame, freeze_stars: bool, budget: int) -> DataFrame:
     row_bytes = _row_bytes(e.schema)
+    num_partitions = int(e.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
     def _checkpoint_with_sig(df):
         """Materialize one round AND collect its edge-set signature and
@@ -252,7 +232,7 @@ def _cc_loop_inner(
     g_blocks = _checkpoint_blocks(g)
     frozen_parts: list[DataFrame] = []
     labels = None
-    for _ in range(max_iter):
+    for _ in range(MAX_ITER):
         if sig_old[1] == 0:
             break  # no active edges left — everything frozen or isolated
         # driver finish: g is symmetric, so its u < v half carries every
@@ -261,7 +241,7 @@ def _cc_loop_inner(
         if g_bytes // 2 <= budget:
             half = g.filter(F.col("u") < F.col("v")).toArrow()
             labels = _driver_labels(
-                e.sparkSession, half, g.schema["u"].dataType, ("u", "c"), False
+                e.sparkSession, half, g.schema["u"].dataType, ("u", "c")
             )
             break
         # per-node neighborhood min + degree: feeds BOTH the freeze test
@@ -384,14 +364,12 @@ def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    num_partitions: int = 32,
-    max_iter: int = 50,
     freeze_stars: bool = True,
-    ordered_ids: bool = False,
 ) -> DataFrame:
-    """-> (node, component); component = min node name in the cluster, so
-    output is deterministic regardless of hash values. Self-edges tolerated
-    (define isolated nodes); an edge with a null endpoint links nothing.
+    """-> (node, component) under the module's output contract: component
+    = the smallest node of the cluster, so the output is deterministic;
+    self-loop-only nodes get no row; an edge with a null endpoint links
+    nothing. Both columns keep the endpoints' common type.
 
     The driver-finish gate's budget is the session's
     ``spark.sql.autoBroadcastJoinThreshold`` (-1 or 0 = never). Under a
@@ -402,7 +380,8 @@ def connected_components(
     so nothing upstream of ``edges`` is computed twice; the loop re-checks
     the gate after every round from the round's observed edge bytes, so a
     large graph still finishes on the driver once its frontier has shrunk
-    into the budget. Both paths give identical labels.
+    into the budget. Both paths give identical labels. The loop shuffles
+    into ``spark.sql.shuffle.partitions`` partitions.
 
     Session-wide side effect of the LOOP only: while it runs,
     ``spark.sql.constraintPropagation.enabled`` is disabled on the SHARED
@@ -424,78 +403,26 @@ def connected_components(
     loop keeps re-shuffling the whole edge set every round. The freeze test
     piggybacks on the aggregation large-star already needs (min + count per
     node), so a round costs one extra small join, not an extra pass over
-    the edges.
-
-    ordered_ids=False (default): node names are hashed to longs up front
-    with xxhash64 so strings never shuffle inside the loop; names are
-    joined back once at the end, and a per-component min-name pass restores
-    the deterministic label. ordered_ids=True skips all of that: the loop
-    runs DIRECTLY on the string names — the algorithm only needs a total
-    order, and lexicographic order IS one — so the loop's min node is
-    already the min name. That removes two vocabulary-scale hash joins at
-    init and the name-join + rep-groupBy + rep-join at assembly (measured
-    the dominant cost on star-dominated graphs where freeze leaves only
-    ~1 heavy round to benefit from narrow 8-byte shuffles). Trade-off:
-    loop shuffles carry full strings, so prefer the hashed form when the
-    graph needs many rounds. In ordered mode, nodes whose every edge is a
-    self-loop get no output row (no other node can reference them; callers
-    coalesce to identity); hashed mode gives them a row of their own, and
-    a null name one (null, null) row. The driver path keeps both
-    contracts."""
+    the edges."""
     spark = edges.sparkSession
     budget = broadcast_budget(spark)
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    node_type = (
+        e.select("u").unionByName(e.select(F.col("v").alias("u"))).schema[0].dataType
+    )
+    e = e.select(F.col("u").cast(node_type), F.col("v").cast(node_type))
     pinned = None
     if budget:
-        node_type = (
-            e.select("u").unionByName(e.select(F.col("v").alias("u"))).schema[0].dataType
-        )
-        e = e.select(F.col("u").cast(node_type), F.col("v").cast(node_type))
         e, m = _checkpoint_observed(e, b=F.sum(_row_bytes(e.schema)))
         pinned = _checkpoint_blocks(e)
         if (m["b"] or 0) <= budget:
             labels = _driver_labels(
-                spark, e.toArrow(), node_type, ("node", "component"), not ordered_ids
+                spark, e.toArrow(), node_type, ("node", "component")
             )
             _unpersist_blocks(pinned)
             return labels
-
-    if ordered_ids:
-        # the loop's labels are its own checkpoint (or driver-built), so
-        # the pinned input is dead once it returns
-        labels = _cc_loop(e, num_partitions, max_iter, freeze_stars, budget)
-        _unpersist_blocks(pinned)
-        return labels.select(
-            F.col("u").alias("node"), F.col("c").alias("component")
-        )
-
-    nodes = (
-        e.select(F.col("u").alias("name"))
-        .unionByName(e.select(F.col("v").alias("name")))
-        .distinct()
-        .withColumn("nid", F.xxhash64("name"))
-        .cache()
-    )
-    ids = (
-        e.select(F.col("u").alias("name"), F.col("v").alias("dname"))
-        .join(nodes, "name")
-        .select(F.col("nid").alias("u"), F.col("dname").alias("name"))
-        .join(nodes, "name")
-        .select("u", F.col("nid").alias("v"))
-    )
-    labels = _cc_loop(ids, num_partitions, max_iter, freeze_stars, budget)
-    all_nodes = nodes.select(F.col("nid").alias("u"))
-    labels = all_nodes.join(labels, "u", "left").select(
-        "u", F.coalesce("c", F.col("u")).alias("c")
-    )
-
-    named = labels.join(
-        nodes.select(F.col("nid").alias("u"), F.col("name").alias("node")), "u"
-    ).select("node", "c")
-    rep = named.groupBy("c").agg(F.min("node").alias("component"))
-    # materialize the |nodes|-row result while the node table is still
-    # cached, then release the cache and the pinned input
-    out = named.join(rep, "c").select("node", "component").localCheckpoint()
-    nodes.unpersist()
+    # the loop's labels are its own checkpoint (or driver-built), so the
+    # pinned input is dead once it returns
+    labels = _cc_loop(e, freeze_stars, budget)
     _unpersist_blocks(pinned)
-    return out
+    return labels.select(F.col("u").alias("node"), F.col("c").alias("component"))

@@ -12,8 +12,9 @@ Two parts, per SURVEY.md §4 and the north star stage (3):
                     edge set fits the session's broadcast byte budget, the
                     large-star/small-star loop above it.
 
-Above the budget the loop's input is explicitly repartitioned (north rule)
-and hot entities are defused inside the algorithm (see components.py).
+Above the budget the loop's input is explicitly repartitioned into the
+session's shuffle partitions (north rule) and hot entities are defused
+inside the algorithm (see components.py).
 """
 
 from __future__ import annotations
@@ -70,33 +71,26 @@ def similarity_edges(
     return red.unionByName(same_label).filter(F.col("src") != F.col("dst"))
 
 
-def canonicalize(
-    entity_label: DataFrame, redirects: DataFrame, num_partitions: int = 32
-) -> DataFrame:
-    """-> (node, component): canonical cluster id per entity.
+def canonicalize(entity_label: DataFrame, redirects: DataFrame) -> DataFrame:
+    """-> (node, component): canonical cluster id per entity, the smallest
+    entity URI of its cluster.
 
-    Runs connected_components in ordered-ids mode under its one adaptive
-    gate: when the similarity edges fit the session's broadcast byte
-    budget (``spark.sql.autoBroadcastJoinThreshold``) they are pulled by
-    one bounded Arrow collect and labelled by a union-find on the driver,
-    and the session's constraint-propagation conf is never touched.
-    Larger graphs run the loop until a round's frontier fits the budget,
-    then finish the same way. Entity URIs are totally ordered
-    (lexicographically), so the loop runs directly on the names and its
-    min IS the deterministic min-name label. That removes the two
-    vocabulary-scale hash joins at init and the name-join + rep-groupBy +
-    rep-join at assembly that dominated this stage at 32M quads (the
-    similarity graph is star-dominated — label groups and redirect alias
-    pairs — so star-freezing leaves only ~1 heavy loop round, and the
-    narrow-hashed-id trade-off no longer pays).
+    Runs connected_components on the entity names themselves (URIs are
+    totally ordered, so the min node IS the deterministic label) under its
+    one adaptive gate: when the similarity edges fit the session's
+    broadcast byte budget (``spark.sql.autoBroadcastJoinThreshold``) they
+    are pulled by one bounded Arrow collect and labelled by a union-find
+    on the driver, and the session's constraint-propagation conf is never
+    touched. Larger graphs run the loop, shuffled into
+    ``spark.sql.shuffle.partitions`` partitions, until a round's frontier
+    fits the budget, then finish the same way. The similarity graph is
+    star-dominated (label groups and redirect alias pairs), so star
+    freezing leaves about one heavy loop round.
 
     Entities absent from the graph (no same-label peer, no redirect) have
     no row; apply_canonical coalesces them to themselves.
     """
-    edges = similarity_edges(entity_label, redirects)
-    return connected_components(
-        edges, "src", "dst", num_partitions=num_partitions, ordered_ids=True
-    )
+    return connected_components(similarity_edges(entity_label, redirects))
 
 
 def apply_canonical(decided: DataFrame, canon: DataFrame) -> DataFrame:

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import stable_hash32
+from ..session import broadcast_budget, estimated_row_bytes
 
 
 def dictionary_encode(
@@ -120,7 +121,6 @@ def negative_samples(
     entity_pool: DataFrame,
     attempts: int = 5,
     corrupt: str = "o",
-    broadcast_max_rows: int | None = None,
     pool_rows: int | None = None,
 ) -> DataFrame:
     """-> (s, p, o, attempt) corrupted triples NOT present in the KB.
@@ -130,12 +130,13 @@ def negative_samples(
     a left_anti join (J13). Downsampling to |pos| is the caller's
     ``.limit``/``row_number`` choice.
 
-    The pool join is broadcast ONLY under an explicit row budget (same
-    rationale as stages/score.py BROADCAST_MAX_ROWS): the pool is the full
-    entity vocabulary, which grows with the corpus — at 100 TB it is
-    hundreds of millions of rows and an unconditional broadcast is the
-    classic serial-build / ship-everywhere failure. Above the budget the
-    join shuffles on ``eid``, a uniform dense-id key, at full parallelism.
+    The pool join is broadcast ONLY when the pool's rows at Spark's per-row
+    size estimate fit the session's broadcast byte budget (the same gate as
+    the entity-vector join in stages/score.py): the pool is the full entity
+    vocabulary, which grows with the corpus — at 100 TB it is hundreds of
+    millions of rows and an unconditional broadcast is the classic
+    serial-build / ship-everywhere failure. Above the budget the join
+    shuffles on ``eid``, a uniform dense-id key, at full parallelism.
 
     pool_rows: distinct-entity count from caller metadata (Iceberg
     manifest / stage lineage — the kge_entity_rows pattern). Without it
@@ -145,9 +146,6 @@ def negative_samples(
     threaded into dictionary_encode's approx_rows — identical n_pool and
     identical dense ids, one fewer full pass either way.
     """
-    from .score import BROADCAST_MAX_ROWS
-
-    budget = BROADCAST_MAX_ROWS if broadcast_max_rows is None else broadcast_max_rows
     distinct_pool = entity_pool.select(F.col("entity")).distinct()
     n_pool = pool_rows if pool_rows is not None else distinct_pool.count()
     pool = dictionary_encode(
@@ -164,7 +162,9 @@ def negative_samples(
         )
         % n_pool,
     )
-    pool_side = F.broadcast(pool) if n_pool <= budget else pool
+    budget = broadcast_budget(triples.sparkSession)
+    fits = budget and n_pool * estimated_row_bytes(pool.schema) <= budget
+    pool_side = F.broadcast(pool) if fits else pool
     corrupted = cand.join(pool_side, "eid").drop("eid")
     if corrupt == "o":
         corrupted = corrupted.select(

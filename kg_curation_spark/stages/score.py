@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import normalize_text
+from ..session import broadcast_budget, estimated_row_bytes
 
 # deterministic stand-in weights for the plausibility model (M8): logistic
 # over [lex, link, node, emb, bias]. A real deployment drops a trained
@@ -44,18 +45,6 @@ from ..functions.text import normalize_text
 MODEL_W = np.array([1.2, 2.2, 0.3, 1.5, -3.4], dtype="float64")
 
 MODEL_FEATURES = ["lex_score", "link_feat", "node_feat", "emb_score"]
-
-# Dimension tables up to this many rows get an explicit broadcast hint.
-# Budget rationale: the broadcast hash relation is BUILT SERIALLY (driver
-# collect + single-threaded hash build) before any task runs — a fixed
-# floor that does not shrink with executors. Measured on the 8M-quad
-# corpus: a 5.5M-row entity-vector broadcast costs ~a minute of serial
-# build per stage and caps the score stage's parallel speedup; the shuffle
-# join of the same tables is fully parallel. 1.5M rows (~150-200 MB at
-# dim 16 + overhead) is where the serial build stops paying for the saved
-# shuffle on both this sandbox and a production 1000-executor cluster
-# (where the same relation must also ship to every executor).
-BROADCAST_MAX_ROWS = 1_500_000
 
 
 def attach_features(
@@ -145,21 +134,22 @@ def join_pair_features(
     )
 
     # Embedding attach (J10): dimension joins, zeros for missing. The
-    # entity-vector side grows with the corpus, so broadcast is gated on an
-    # explicit row budget (a 1000-executor cluster cannot ship a multi-GB
-    # hash relation everywhere); under the budget the broadcast hint saves
-    # the shuffle. AQE still auto-broadcasts when post-UDF stats are known.
-    # Callers that already know the entity-vector row count (stage lineage,
+    # entity-vector side grows with the corpus, so broadcast is gated on the
+    # session's byte budget at Spark's per-row size estimate (a broadcast
+    # relation is built serially on the driver and shipped to every
+    # executor); under the budget the broadcast hint saves the shuffle. AQE
+    # still auto-broadcasts when post-UDF stats are known. Callers that
+    # already know the entity-vector row count (stage lineage,
     # Iceberg/parquet manifest metadata) pass kge_entity_rows and skip the
-    # limit+count probe job entirely.
+    # limit+count probe job entirely; a budget of 0 needs no probe.
     evec = kge.filter(F.col("kind") == "e").select("id", "vec")
     rvec = kge.filter(F.col("kind") == "r").select("id", "vec")
-    n_evec = (
-        kge_entity_rows
-        if kge_entity_rows is not None
-        else evec.limit(BROADCAST_MAX_ROWS + 1).count()
-    )
-    if n_evec <= BROADCAST_MAX_ROWS:
+    budget = broadcast_budget(kge.sparkSession)
+    row_bytes = estimated_row_bytes(evec.schema)
+    n_evec = kge_entity_rows
+    if n_evec is None and budget:
+        n_evec = evec.limit(budget // row_bytes + 1).count()
+    if budget and n_evec * row_bytes <= budget:
         evec = F.broadcast(evec)
     rvec = F.broadcast(rvec)  # relation vocabulary is always small
     cand = (

@@ -2,7 +2,10 @@
 
 Every graph runs through both branches of the driver-finish gate: a
 broadcast threshold of -1 forces the large-star/small-star loop, the
-session default finishes on the driver. Labels must be identical."""
+session default finishes on the driver. Labels must be identical, and
+equal to a plain-Python union-find under the one output contract: label =
+smallest node, self-loop-only nodes get no row, a null endpoint links
+nothing."""
 
 from __future__ import annotations
 
@@ -28,7 +31,7 @@ def _broadcast_threshold(spark, value):
 
 def _run(spark, edges, schema="src string, dst string", **kw):
     df = spark.createDataFrame(edges, schema)
-    out = connected_components(df, num_partitions=8, **kw)
+    out = connected_components(df, **kw)
     return {r["node"]: r["component"] for r in out.collect()}
 
 
@@ -46,8 +49,10 @@ def _run_both(spark, edges, **kw):
     return driver
 
 
-def _ref_labels(edges, keep_isolated):
-    """Plain-Python union-find reference: node -> smallest node name."""
+def _ref_labels(edges):
+    """Plain-Python union-find reference: node -> smallest node name, for
+    every endpoint of an edge that is neither a self-loop nor has a null
+    end."""
     parent = {}
 
     def find(x):
@@ -57,7 +62,7 @@ def _ref_labels(edges, keep_isolated):
         return x
 
     for u, v in edges:
-        if u is None or v is None or (u == v and not keep_isolated):
+        if u is None or v is None or u == v:
             continue
         for x in (u, v):
             parent.setdefault(x, x)
@@ -74,7 +79,7 @@ def test_two_chains_and_isolate(spark):
     )
     assert comp["a"] == comp["b"] == comp["c"] == "a"
     assert comp["x"] == comp["y"] == "x"
-    assert comp["z"] == "z"
+    assert "z" not in comp  # self-loop-only: no row
 
 
 def test_long_path_converges(spark):
@@ -135,17 +140,13 @@ def test_freeze_stars_random_graphs_equivalent(spark):
         frozen = _run_loop(spark, edges, freeze_stars=True)
         assert frozen == base, f"seed {seed}"
         assert _run(spark, edges) == base, f"seed {seed}"
-        assert base == _ref_labels(edges, keep_isolated=True), f"seed {seed}"
-        ordered = _run_both(spark, edges, ordered_ids=True)
-        # ordered mode omits self-loop-only nodes (documented contract)
-        iso = {n for n, c in base.items() if c == n and n not in ordered}
-        assert {n: c for n, c in base.items() if n not in iso} == ordered, seed
+        assert base == _ref_labels(edges), f"seed {seed}"
 
 
-def test_canonicalize_ordered_mode_equals_hashed_cc(spark):
-    """stages/canonicalize.canonicalize (ordered-ids CC over the names)
-    must agree exactly with the hashed CC + min-name-rep form on a graph
-    mixing multi-label bridge entities, redirect chains through unlabeled
+def test_canonicalize_equals_reference_union_find(spark):
+    """stages/canonicalize.canonicalize must agree in both branches with a
+    plain union-find over its own similarity edges, on a graph mixing
+    multi-label bridge entities, redirect chains through unlabeled
     entities, redirects inside a group, and cross-group redirect merges."""
     from kg_curation_spark.stages.canonicalize import (
         canonicalize, similarity_edges,
@@ -179,21 +180,16 @@ def test_canonicalize_ordered_mode_equals_hashed_cc(spark):
         ],
         "entity string, equivalent string",
     )
-    flat = connected_components(
-        similarity_edges(entity_label, redirects), "src", "dst",
-        num_partitions=8, ordered_ids=False,
-    )
-    flat_m = {r["node"]: r["component"] for r in flat.collect()}
+    edges = similarity_edges(entity_label, redirects).collect()
     # canonicalize takes the session budget: -1 forces the loop
     got = {}
     for branch, threshold in (("loop", "-1"), ("driver", str(64 << 20))):
         with _broadcast_threshold(spark, threshold):
-            ordered = canonicalize(entity_label, redirects, num_partitions=8)
-            got[branch] = {r["node"]: r["component"] for r in ordered.collect()}
+            canon = canonicalize(entity_label, redirects)
+            got[branch] = {r["node"]: r["component"] for r in canon.collect()}
     assert got["loop"] == got["driver"]
     got_m = got["driver"]
-    # ordered-ids mode must agree with the hashed+min-name-rep form exactly
-    assert got_m == flat_m
+    assert got_m == _ref_labels([(r["src"], r["dst"]) for r in edges])
     # spot checks: delta merged into alpha through the unlabeled chain
     assert got_m["d1"] == got_m["a1"] == "a1"
     assert got_m["m1"] == got_m["b1"] == got_m["g1"] == "b1"
@@ -218,7 +214,7 @@ def test_many_small_clusters_int64(spark):
         doc += size + rng.randrange(3)
     edges += [(b, a) for a, b in edges[::7]]  # both directions, duplicates
     comp = _run_both(spark, edges, schema="src long, dst long")
-    assert comp == _ref_labels(edges, keep_isolated=True)
+    assert comp == _ref_labels(edges)
     assert len(set(comp.values())) == 150
 
 
@@ -233,24 +229,41 @@ def test_non_ascii_names_order_like_spark(spark):
         ("日本", "中文"), ("中文", "ß"),
         ("A", "a"),
     ]
-    for ordered in (False, True):
-        comp = _run_both(spark, edges, ordered_ids=ordered)
-        assert comp == _ref_labels(edges, keep_isolated=True)
+    comp = _run_both(spark, edges)
+    assert comp == _ref_labels(edges)
     assert comp["\U0001d518"] == "zeta"
     assert comp["\uffef"] == "zeta"
 
 
 def test_null_endpoints_and_self_loops(spark):
-    """An edge with a null endpoint links nothing. Hashed mode keeps a row
-    for every name seen (a null name gets (null, null)); ordered mode only
-    for endpoints of non-self-loop edges."""
+    """An edge with a null endpoint links nothing, and a node whose every
+    edge is a self-loop gets no row: only endpoints of non-self-loop
+    edges appear."""
     edges = [("a", "b"), ("b", None), (None, "c"), ("z", "z"), ("q", "q"),
              ("q", "r"), (None, None)]
-    hashed = _run_both(spark, edges)
-    assert hashed == {"a": "a", "b": "a", "c": "c", "q": "q", "r": "q",
-                      "z": "z", None: None}
-    ordered = _run_both(spark, edges, ordered_ids=True)
-    assert ordered == {"a": "a", "b": "a", "q": "q", "r": "q"}
+    comp = _run_both(spark, edges)
+    assert comp == {"a": "a", "b": "a", "q": "q", "r": "q"}
+    assert comp == _ref_labels(edges)
+
+
+def test_node_type_kept_in_both_branches(spark):
+    """Both paths run on the nodes themselves: the output columns keep the
+    endpoints' common type, int64 and string alike."""
+    from pyspark.sql.types import LongType, StringType
+
+    cases = [
+        ("src long, dst long", [(30, 10), (10, 20), (7, 8), (5, 5)], LongType()),
+        ("src int, dst long", [(30, 10), (10, 20), (7, 8)], LongType()),
+        ("src string, dst string", [("c", "a"), ("a", "b"), ("x", "y")], StringType()),
+    ]
+    for schema, edges, dtype in cases:
+        df = spark.createDataFrame(edges, schema)
+        for threshold in ("-1", str(64 << 20)):
+            with _broadcast_threshold(spark, threshold):
+                out = connected_components(df)
+                assert [f.dataType for f in out.schema] == [dtype, dtype], schema
+                comp = {r["node"]: r["component"] for r in out.collect()}
+            assert comp == _ref_labels(edges), (schema, threshold)
 
 
 def test_loop_rounds_then_driver_finish(spark, monkeypatch):
@@ -268,19 +281,17 @@ def test_loop_rounds_then_driver_finish(spark, monkeypatch):
         calls["sym"] += 1
         return sym(*a, **kw)
 
-    def record_driver(spark_, t, dtype, names, keep_isolated):
+    def record_driver(spark_, t, dtype, names):
         calls["driver"].append(names)
-        return drv(spark_, t, dtype, names, keep_isolated)
+        return drv(spark_, t, dtype, names)
 
     monkeypatch.setattr(components, "_sym_dedup_by_u", count_sym)
     monkeypatch.setattr(components, "_driver_labels", record_driver)
-    for ordered in (False, True):
-        calls["sym"], calls["driver"] = 0, []
-        with _broadcast_threshold(spark, "1000"):
-            comp = _run(spark, edges, ordered_ids=ordered)
-        assert calls["sym"] >= 3  # initial symmetrize + at least one round
-        assert calls["driver"] == [("u", "c")]  # finished mid-loop
-        assert comp == _ref_labels(edges, keep_isolated=True)
+    with _broadcast_threshold(spark, "1000"):
+        comp = _run(spark, edges)
+    assert calls["sym"] >= 3  # initial symmetrize + at least one round
+    assert calls["driver"] == [("u", "c")]  # finished mid-loop
+    assert comp == _ref_labels(edges)
 
 
 def test_driver_path_leaves_constraint_conf_unchanged(spark, monkeypatch):
@@ -299,8 +310,7 @@ def test_driver_path_leaves_constraint_conf_unchanged(spark, monkeypatch):
 
     monkeypatch.setattr(RuntimeConfig, "set", spy)
     edges = [("a", "b"), ("b", "c"), ("x", "y")]
-    for ordered in (False, True):
-        _run(spark, edges, ordered_ids=ordered)
+    _run(spark, edges)
     assert writes == []
     _run_loop(spark, edges)
     assert writes == ["false", "true"]

@@ -31,25 +31,33 @@ def test_negative_samples_reject_existing_and_are_deterministic(spark):
 
 
 def test_negative_samples_shuffle_join_above_broadcast_budget(spark):
-    """Pool above the broadcast budget: the pool join must NOT broadcast
-    (the pool is the full entity vocabulary — unbounded at 100 TB); under
-    the budget it must. VERDICT r02 'What's wrong' #1."""
+    """Pool above the session's broadcast byte budget: the pool join must
+    NOT broadcast (the pool is the full entity vocabulary — unbounded at
+    100 TB); under the budget it must. VERDICT r02 'What's wrong' #1."""
     triples = spark.createDataFrame(
         [("s1", "p", "e1"), ("s2", "p", "e2")], "s string, p string, o string"
     )
     pool = spark.createDataFrame(
         [(f"e{i}",) for i in range(1, 40)], "entity string"
     )
-    gated = negative_samples(triples, pool, attempts=3, broadcast_max_rows=10)
-    plan = gated._jdf.queryExecution().executedPlan().toString()
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    try:
+        # 39 pool rows x 36 estimated bytes is above a 1000-byte budget
+        spark.conf.set(key, "1000")
+        gated = negative_samples(triples, pool, attempts=3)
+        plan = gated._jdf.queryExecution().executedPlan().toString()
+        gated_rows = sorted(map(tuple, gated.collect()))
+    finally:
+        spark.conf.set(key, prev)
     # the eid pool join is shuffled; only the tiny attempts/offsets tables
     # may broadcast — so exactly one shuffle-side join on eid must exist
     assert "SortMergeJoin [eid" in plan or "ShuffledHashJoin [eid" in plan, plan
-    hinted = negative_samples(triples, pool, attempts=3, broadcast_max_rows=10**6)
+    hinted = negative_samples(triples, pool, attempts=3)
     plan2 = hinted._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin [eid" not in plan2 and "ShuffledHashJoin [eid" not in plan2
     # both strategies produce identical rows
-    assert sorted(map(tuple, gated.collect())) == sorted(map(tuple, hinted.collect()))
+    assert gated_rows == sorted(map(tuple, hinted.collect()))
 
 
 def test_dictionary_encode_no_cache_leak_and_value_buckets(spark):

@@ -77,7 +77,7 @@ def time_cc(edges, threshold: str | None, **kw) -> tuple[float, int]:
         conf.set(key, threshold)
     try:
         t0 = time.time()
-        n = connected_components(edges, num_partitions=32, **kw).count()
+        n = connected_components(edges, **kw).count()
         return time.time() - t0, n
     finally:
         conf.set(key, prev)

@@ -124,8 +124,7 @@ def run_score(spark, kb):
 def run_canonicalize(spark, kb):
     from kg_curation_spark.stages.canonicalize import canonicalize
 
-    n = int(spark.sparkContext.defaultParallelism)
-    return canonicalize(kb["entity_label"], kb["redirects"], num_partitions=max(2 * n, 32))
+    return canonicalize(kb["entity_label"], kb["redirects"])
 
 
 STAGES = {

@@ -32,15 +32,46 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
 
 
+def open_oracle(sf_dir: str = SF_DIR) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per testdata table at sf_dir."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    return con
+
+
+def compare(got: pd.DataFrame, want: pd.DataFrame) -> None:
+    """Raise AssertionError unless got and want hold the same columns and,
+    order-insensitively, the same rows."""
+    g, w = norm(got), norm(want)
+    if list(g.columns) != list(w.columns):
+        raise AssertionError(f"columns {list(g.columns)} != {list(w.columns)}")
+    if len(g) != len(w):
+        raise AssertionError(f"rowcount {len(g)} != {len(w)}")
+    diffs = []
+    for c in g.columns:
+        a, b = g[c], w[c]
+        if np.issubdtype(a.dtype, np.floating) or np.issubdtype(b.dtype, np.floating):
+            d = np.nanmax(
+                np.abs(a.astype(float).to_numpy() - b.astype(float).to_numpy())
+            ) if len(a) else 0.0
+            if d > 0:
+                diffs.append(f"{c}: maxdiff={d:.2e}")
+        else:
+            neq = (a.astype(str) != b.astype(str)).sum()
+            if neq:
+                diffs.append(f"{c}: {neq} mismatched")
+    if diffs:
+        raise AssertionError("; ".join(diffs))
+
+
 def main(names: list[str]) -> int:
     import __spark_entry__ as e
     from kg_curation_spark.session import get_spark
 
     spark = get_spark(parallelism=16)
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")
+    con = open_oracle()
 
     qs, orc = e.queries(), e.oracle_sql()
     # The driver records at most MAX_DRIVER_QUERIES CORRECTNESS rows per
@@ -63,30 +94,8 @@ def main(names: list[str]) -> int:
             if name not in orc:
                 print(f"{name:28s} rows={len(got):7d}  (no oracle — rows-only)")
                 continue
-            want = con.sql(orc[name]).df()
-            g, w = norm(got), norm(want)
-            if list(g.columns) != list(w.columns):
-                raise AssertionError(f"columns {list(g.columns)} != {list(w.columns)}")
-            if len(g) != len(w):
-                raise AssertionError(f"rowcount {len(g)} != {len(w)}")
-            diffs = []
-            for c in g.columns:
-                a, b = g[c], w[c]
-                if np.issubdtype(a.dtype, np.floating) or np.issubdtype(
-                    b.dtype, np.floating
-                ):
-                    d = np.nanmax(
-                        np.abs(a.astype(float).to_numpy() - b.astype(float).to_numpy())
-                    ) if len(a) else 0.0
-                    if d > 0:
-                        diffs.append(f"{c}: maxdiff={d:.2e}")
-                else:
-                    neq = (a.astype(str) != b.astype(str)).sum()
-                    if neq:
-                        diffs.append(f"{c}: {neq} mismatched")
-            if diffs:
-                raise AssertionError("; ".join(diffs))
-            print(f"{name:28s} rows={len(g):7d}  OK")
+            compare(got, con.sql(orc[name]).df())
+            print(f"{name:28s} rows={len(got):7d}  OK")
         except Exception as ex:
             fails += 1
             print(f"{name:28s} FAIL: {ex}")
