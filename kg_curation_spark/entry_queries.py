@@ -560,7 +560,7 @@ def exact_dedup_query(spark, sf_dir):
     "GROUP BY id, seed",
 )
 def minhash_signatures_query(spark, sf_dir):
-    # fused array path: bit-identical signatures, no exploded-shingle shuffle
+    # one wide minhash aggregate per doc: no exploded-shingle shuffle
     from .operators.dedup import minhash_signatures_fused
 
     return minhash_signatures_fused(
@@ -953,7 +953,7 @@ def media_features_meta_query(spark, sf_dir):
     from .multimodal import asset_table, extract_features
 
     media = asset_table(_t(spark, sf_dir, "documents"))
-    return extract_features(media, fake_decode=True).select(
+    return extract_features(media).select(
         "media_id", "kind", "n_bytes", F.size("feature").alias("feature_dim")
     )
 

@@ -86,20 +86,6 @@ def word_ngrams(tokens: Column, n: int, sep: str = " ") -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def char_shingles(col: Column | str, k: int) -> Column:
-    """Character k-shingles of normalized text -> array<string> (distinct)."""
-    c = normalize_text(col)
-    return F.when(
-        F.length(c) >= k,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.length(c) - (k - 1)),
-                lambda i: c.substr(i, F.lit(k)),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 # ---------------------------------------------------------------------------
 # Matching / hashing
 
@@ -110,13 +96,6 @@ def lexical_match(literal: Column | str, entity_uri: Column | str) -> Column:
     lit = F.col(literal) if isinstance(literal, str) else literal
     name = F.lower(F.regexp_replace(uri_localname(entity_uri), "_", " "))
     return F.lower(F.trim(lit)) == name
-
-
-def content_sha256(col: Column | str) -> Column:
-    """sha256 hex of a string column — the per-row end-to-end invariant
-    (BASELINE.json input_hint)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sha2(c, 256)
 
 
 def stable_hash32(col: Column, seed: int = 0) -> Column:

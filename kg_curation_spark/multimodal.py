@@ -1,25 +1,11 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns
 with typed metadata, processed through Arrow-batched mapInPandas.
 
-Decode support is tiered by what the container provides:
-
-  * REAL decoders (pure python/numpy, no external libs): WAV (stdlib
-    ``wave``) for audio; uncompressed 24/32-bpp BMP, binary PPM (P6),
-    COMPRESSED non-interlaced 8-bit PNG (stdlib zlib inflate + scanline
-    unfilter), and baseline sequential JPEG (jpeg.py: Huffman entropy
-    decode, dequant, IDCT, chroma upsample) for images — see
-    ``decode_media``. Exercised by tests on real payloads, including
-    PNGs using all five filter types and JPEGs at 4:4:4/4:2:0/grayscale
-    with restart markers.
-  * Remaining formats (MP3/MP4, progressive JPEG, interlaced/16-bit
-    PNG…) need PIL/ffmpeg, which are NOT in this container — those raise
-    NotImplementedError at the decode site (declared gap).
-    ``fake_decode=True`` keeps the deterministic sha-seeded stub for
-    harness use.
-
-The Spark-side plumbing — binary schema, metadata struct,
-partition-preserving UDF signature, Arrow batch shape — is identical for
-all three tiers; a full decoder drops into ``decode_media`` only.
+There is no media codec: the feature vector is a deterministic stand-in
+derived from the payload's sha256 (``_feature``). The Spark-side plumbing
+— binary schema, metadata columns, partition-preserving UDF signature,
+Arrow batch shape — is what the ``media_features_meta`` query checks; a
+real decoder would replace ``_feature`` only.
 """
 
 from __future__ import annotations
@@ -37,15 +23,6 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
-)
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType()),
-        StructField("kind", StringType()),  # image | audio | video
-        StructField("mime", StringType()),
-        StructField("payload", StringType()),  # binary carried as... see asset_table
-    ]
 )
 
 FEATURE_SCHEMA = StructType(
@@ -75,231 +52,21 @@ def asset_table(documents: DataFrame) -> DataFrame:
     )
 
 
-def _decode_wav(payload: bytes) -> np.ndarray:
-    """Real audio decode: stdlib ``wave`` -> samples -> 8-dim feature
-    [duration_s, rate_khz, channels, rms, zero_cross_rate, mean, max, min]
-    (sample values normalized to [-1, 1])."""
-    import io
-    import wave
-
-    with wave.open(io.BytesIO(payload)) as w:
-        rate, nch, width = w.getframerate(), w.getnchannels(), w.getsampwidth()
-        frames = w.readframes(w.getnframes())
-    dtype = {1: np.uint8, 2: "<i2", 4: "<i4"}.get(width)
-    if dtype is None:
-        raise NotImplementedError(f"unsupported WAV sample width {width}")
-    x = np.frombuffer(frames, dtype=dtype).astype("float64")
-    if width == 1:  # 8-bit WAV is unsigned
-        x = x - 128.0
-    x = x / float(2 ** (8 * width - 1))
-    if not len(x):
-        x = np.zeros(1)
-    zcr = float(np.mean(np.signbit(x[1:]) != np.signbit(x[:-1]))) if len(x) > 1 else 0.0
-    dur = len(x) / max(nch, 1) / max(rate, 1)
-    return np.array(
-        [dur, rate / 1000.0, nch, float(np.sqrt(np.mean(x * x))), zcr,
-         float(x.mean()), float(x.max()), float(x.min())],
-        dtype="float32",
-    )
-
-
-def _pixel_feature(px: np.ndarray, w: int, h: int) -> np.ndarray:
-    """(h, w, 3) uint8 -> [width, height, channels, mean_r, mean_g, mean_b,
-    luma_mean, luma_std] with channel means in [0, 1]."""
-    f = px.astype("float64") / 255.0
-    luma = f @ np.array([0.299, 0.587, 0.114])
-    return np.array(
-        [w, h, px.shape[2], f[..., 0].mean(), f[..., 1].mean(), f[..., 2].mean(),
-         luma.mean(), luma.std()],
-        dtype="float32",
-    )
-
-
-def _decode_bmp(payload: bytes) -> np.ndarray:
-    """Real image decode: uncompressed 24/32-bpp bottom-up BMP
-    (BITMAPINFOHEADER), pure numpy — header fields + padded BGR(A) rows."""
-    if payload[:2] != b"BM":
-        raise ValueError("not a BMP payload")
-    off = int.from_bytes(payload[10:14], "little")
-    w = int.from_bytes(payload[18:22], "little", signed=True)
-    h = int.from_bytes(payload[22:26], "little", signed=True)
-    bpp = int.from_bytes(payload[28:30], "little")
-    comp = int.from_bytes(payload[30:34], "little")
-    if bpp not in (24, 32) or comp not in (0, 3):
-        raise NotImplementedError(f"BMP bpp={bpp} compression={comp} needs PIL")
-    nch = bpp // 8
-    stride = ((w * nch + 3) // 4) * 4  # rows padded to 4 bytes
-    rows = np.frombuffer(payload, dtype=np.uint8, count=stride * abs(h), offset=off)
-    px = rows.reshape(abs(h), stride)[:, : w * nch].reshape(abs(h), w, nch)
-    if h > 0:  # positive height = bottom-up storage
-        px = px[::-1]
-    px = px[..., [2, 1, 0]]  # BGR(A) -> RGB, alpha dropped
-    return _pixel_feature(px, w, abs(h))
-
-
-def _decode_png(payload: bytes) -> np.ndarray:
-    """Real image decode: non-interlaced 8-bit-depth PNG, pure
-    python/numpy — chunk walk, stdlib zlib inflate, scanline unfilter
-    (all five filter types), palette/gray/alpha expansion to RGB.
-    Interlaced (Adam7) and 16-bit-depth PNGs stay NotImplementedError."""
-    import zlib
-
-    if payload[:8] != b"\x89PNG\r\n\x1a\n":
-        raise ValueError("not a PNG payload")
-    pos, idat, ihdr, plte = 8, bytearray(), None, None
-    while pos + 8 <= len(payload):
-        ln = int.from_bytes(payload[pos : pos + 4], "big")
-        typ = payload[pos + 4 : pos + 8]
-        data = payload[pos + 8 : pos + 8 + ln]
-        pos += 12 + ln  # length + type + data + CRC
-        if typ == b"IHDR":
-            ihdr = data
-        elif typ == b"PLTE":
-            plte = data
-        elif typ == b"IDAT":
-            idat += data
-        elif typ == b"IEND":
-            break
-    if ihdr is None or not idat:
-        raise ValueError("PNG missing IHDR/IDAT")
-    w = int.from_bytes(ihdr[0:4], "big")
-    h = int.from_bytes(ihdr[4:8], "big")
-    depth, ctype, interlace = ihdr[8], ihdr[9], ihdr[12]
-    nch = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}.get(ctype)
-    if depth != 8 or interlace != 0 or nch is None:
-        raise NotImplementedError(
-            f"PNG depth={depth} color={ctype} interlace={interlace} needs PIL"
-        )
-    raw = zlib.decompress(bytes(idat))
-    stride = w * nch
-    if len(raw) < h * (stride + 1):
-        raise ValueError("PNG pixel data truncated")
-    out = np.empty((h, stride), dtype=np.uint8)
-    prev = np.zeros(stride, dtype=np.uint8)
-    p = 0
-    for y in range(h):
-        f = raw[p]
-        line = np.frombuffer(raw, dtype=np.uint8, count=stride, offset=p + 1).copy()
-        p += 1 + stride
-        if f == 0:
-            cur = line
-        elif f == 2:  # Up — whole-row vectorizable (uint8 wraps mod 256)
-            cur = line + prev
-        elif f in (1, 3, 4):  # Sub / Average / Paeth need the left pixel
-            cur = line
-            li, pv = cur.astype(np.int32), prev.astype(np.int32)
-            for i in range(stride):
-                a = int(cur[i - nch]) if i >= nch else 0  # reconstructed left
-                if f == 1:
-                    li[i] = (li[i] + a) & 0xFF
-                elif f == 3:
-                    li[i] = (li[i] + ((a + pv[i]) >> 1)) & 0xFF
-                else:
-                    b = pv[i]
-                    c = int(pv[i - nch]) if i >= nch else 0
-                    pa, pb, pc = abs(b - c), abs(a - c), abs(a + b - 2 * c)
-                    pr = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                    li[i] = (li[i] + pr) & 0xFF
-                cur[i] = li[i]
-        else:
-            raise ValueError(f"bad PNG filter type {f}")
-        out[y] = cur
-        prev = out[y]
-    px = out.reshape(h, w, nch)
-    if ctype == 3:
-        if plte is None:
-            raise ValueError("palette PNG missing PLTE")
-        pal = np.frombuffer(plte, dtype=np.uint8).reshape(-1, 3)
-        px = pal[px[..., 0]]
-    elif ctype == 0:
-        px = np.repeat(px, 3, axis=2)
-    elif ctype == 4:
-        px = np.repeat(px[..., :1], 3, axis=2)
-    elif ctype == 6:
-        px = px[..., :3]
-    return _pixel_feature(px, w, h)
-
-
-def _decode_jpeg(payload: bytes) -> np.ndarray:
-    """Real image decode: baseline sequential JPEG (SOF0), pure
-    python/numpy — see jpeg.py. Progressive/arithmetic/12-bit modes stay
-    NotImplementedError."""
-    from .jpeg import decode_jpeg
-
-    rgb = decode_jpeg(payload)
-    return _pixel_feature(rgb, rgb.shape[1], rgb.shape[0])
-
-
-def _decode_ppm(payload: bytes) -> np.ndarray:
-    """Real image decode: binary PPM (P6), pure python header + numpy."""
-    if payload[:2] != b"P6":
-        raise ValueError("not a P6 PPM payload")
-    # header = magic, width, height, maxval as whitespace-separated tokens
-    # (comment lines start with '#'), then a single whitespace byte
-    pos, fields = 2, []
-    while len(fields) < 3:
-        while pos < len(payload) and payload[pos : pos + 1].isspace():
-            pos += 1
-        if payload[pos : pos + 1] == b"#":
-            while pos < len(payload) and payload[pos] != 0x0A:
-                pos += 1
-            continue
-        start = pos
-        while pos < len(payload) and not payload[pos : pos + 1].isspace():
-            pos += 1
-        fields.append(int(payload[start:pos]))
-    pos += 1  # the single whitespace after maxval
-    w, h, maxval = fields
-    if maxval > 255:
-        raise NotImplementedError("16-bit PPM needs a wide decoder")
-    px = np.frombuffer(payload, dtype=np.uint8, count=w * h * 3, offset=pos)
-    return _pixel_feature(px.reshape(h, w, 3), w, h)
-
-
-# mime -> real pure-python decoder (one genuine decode path per modality
-# family; compressed formats remain the declared PIL/ffmpeg gap)
-_REAL_DECODERS = {
-    "audio/wav": _decode_wav,
-    "audio/x-wav": _decode_wav,
-    "image/bmp": _decode_bmp,
-    "image/jpeg": _decode_jpeg,
-    "image/png": _decode_png,
-    "image/x-portable-pixmap": _decode_ppm,
-}
-
-
-def decode_media(payload: bytes, mime: str) -> np.ndarray:
-    """Byte payload -> FEATURE_DIM feature vector via a REAL decode when
-    the format has a pure-python decoder, else NotImplementedError."""
-    dec = _REAL_DECODERS.get((mime or "").lower())
-    if dec is None:
-        raise NotImplementedError(
-            f"decode for {mime!r} requires PIL/ffmpeg — not available in "
-            "this environment (real decoders: WAV, BMP, P6 PPM, PNG, "
-            "baseline JPEG); pass fake_decode=True for the deterministic stub"
-        )
-    return dec(payload)
-
-
-def _decode_stub(payload: bytes, kind: str, fake_decode: bool, mime: str = "") -> np.ndarray:
-    if not fake_decode:
-        return decode_media(payload, mime)
-    # deterministic fake "decode": feature = normalized byte histogram moments
+def _feature(payload: bytes) -> np.ndarray:
+    """Deterministic stand-in decode: the payload's sha256 as FEATURE_DIM
+    floats in [0, 1)."""
     import hashlib
 
     h = hashlib.sha256(payload or b"").digest()
     return np.frombuffer(h[: FEATURE_DIM * 4], dtype="<u4").astype("float32") / 2**32
 
 
-def extract_features(media: DataFrame, fake_decode: bool = True) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Binary -> fixed-dim feature vector via Arrow-batched mapInPandas."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            feats = [
-                _decode_stub(p, k, fake_decode, m)
-                for p, k, m in zip(pdf["payload"], pdf["kind"], pdf["mime"])
-            ]
+            feats = [_feature(p) for p in pdf["payload"]]
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],
@@ -309,6 +76,6 @@ def extract_features(media: DataFrame, fake_decode: bool = True) -> DataFrame:
                 }
             )
 
-    return media.select("media_id", "kind", "mime", "payload").mapInPandas(
+    return media.select("media_id", "kind", "payload").mapInPandas(
         run, schema=FEATURE_SCHEMA
     )

@@ -45,10 +45,6 @@ def _norm(a):
     )
 
 
-def _cosine(a, b):
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
 def brute_force_cosine_topk(
     embeddings: DataFrame,
     queries: DataFrame,

@@ -3,19 +3,26 @@
 Exact (hash groupBy), MinHash+LSH (shingle -> minhash -> band -> bucket
 join), SimHash, and n-gram Jaccard. All hashing uses the md5-based
 ``stable_hash32`` so DuckDB oracles reproduce signatures bit-for-bit.
+Each operator has one form; the only second form is ``simhash64``, the
+reference the Arrow simhash is checked against.
 
 Scale notes
 -----------
 * exact_dedup: one shuffle on the content hash; map-side combine applies.
-* minhash: |docs| x |shingles| exploded once, seeds joined as a tiny
-  broadcast grid; the groupBy key (doc, seed) is uniform — no hot keys.
-* LSH pairs: the join key is (band, bucket); bucket sizes are the classic
-  skew risk (near-identical boilerplate docs collapse into one bucket), so
-  the pair join caps bucket size (``max_bucket``) exactly like production
-  near-dup systems drop degenerate buckets.
-* simhash: ``simhash64_arrow`` is the scale path — token hashes stay
-  JVM-side, the signature is ONE vectorized numpy bit-pack per Arrow batch
-  (linear in tokens, no row blowup). ``simhash64`` is the explode form:
+* shingles: ``shingle_pairs`` explodes per-row-distinct word k-grams and
+  never dedups globally — every consumer aggregates or self-joins them.
+* minhash: ``minhash_wide`` computes all n_hashes minima in ONE map-side
+  combinable aggregate keyed by doc — the shuffle carries one narrow row
+  per doc; ``minhash_signatures_fused`` unpivots it to (id, seed, minhash).
+* LSH pairs (``lsh_candidate_pairs_fused`` / ``lsh_pairs_from_wide``):
+  the join key is (band, bucket); bucket sizes are the classic skew risk
+  (near-identical boilerplate docs collapse into one bucket), so the pair
+  join caps bucket size (``max_bucket``) exactly like production near-dup
+  systems drop degenerate buckets.
+* simhash: ``simhash64_arrow`` is the scale path — tokenize runs
+  JVM-side, then each distinct token's md5 and the signature bit-pack run
+  as ONE vectorized numpy pass per Arrow batch (linear in tokens, no row
+  blowup). ``simhash64`` is the explode form:
   tokens x bit-positions (a 32x row multiplication), kept because it is
   oracle-checkable bit-for-bit in DuckDB; both produce identical
   signatures (equivalence pytest + the Arrow form shares the same oracle).
@@ -27,10 +34,10 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import normalize_text, stable_hash32, tokenize, word_ngrams
+from ..functions.text import stable_hash32, tokenize, word_ngrams
 from ..session import broadcast_budget, estimated_row_bytes
 from .spread import ensure_parallelism as _spread
 
@@ -44,83 +51,36 @@ def exact_dedup(df: DataFrame, id_col: str, content_col: str) -> DataFrame:
     )
 
 
-def shingle_pairs(
-    df: DataFrame, id_col: str, text_col: str, k: int = 3, char_level: bool = False
-) -> DataFrame:
-    """-> (id, shingle) within-row-distinct word-k-gram (or char-k)
-    shingles, exploded but NOT globally deduplicated — the narrow building
-    block behind shingle_table and the fused minhash path. It matches the
-    oracle's ``sh`` CTE exactly (the oracle only does per-row
-    ``list_distinct``); consumers that need global (id, shingle) dedup add
-    ``.distinct()`` (shingle_table), aggregating consumers (minhash minima)
-    don't need it.
+def shingle_pairs(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
+    """-> (id, shingle) within-row-distinct word-k-gram shingles, exploded
+    but NOT globally deduplicated. It matches the oracle's ``sh`` CTE
+    exactly (the oracle only does per-row ``list_distinct``), so when the
+    ids are unique the rows are already distinct (id, shingle) pairs;
+    aggregating consumers (minhash minima) would not need the dedup anyway.
 
-    The token array / normalized text is materialized into a column BEFORE
-    the n-gram transform: Catalyst does not eliminate common subexpressions
-    inside higher-order-function lambdas, so inlining tokenize() there
-    re-runs the whole regex chain once per n-gram index (O(len^2) — measured
-    10 s for 5000 docs before this fix, <1 s after). The Project feeding
-    the Generate is the required shape: a Project->Project stack collapses
-    and re-inlines the token array into the lambda (measured 8x slower when
-    the shingle array was staged through a second projection)."""
+    The token array is materialized into a column BEFORE the n-gram
+    transform: Catalyst does not eliminate common subexpressions inside
+    higher-order-function lambdas, so inlining tokenize() there re-runs the
+    whole regex chain once per n-gram index (O(len^2) — measured 10 s for
+    5000 docs before this fix, <1 s after). The Project feeding the
+    Generate is the required shape: a Project->Project stack collapses and
+    re-inlines the token array into the lambda (measured 8x slower when the
+    shingle array was staged through a second projection)."""
     base = _spread(
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))
-    )
-    if char_level:
-        base = base.select("id", normalize_text("__text").alias("__nt"))
-        sh = F.when(
-            F.length("__nt") >= k,
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), F.length("__nt") - (k - 1)),
-                    lambda i: F.col("__nt").substr(i, F.lit(k)),
-                )
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-    else:
-        base = base.select("id", tokenize("__text").alias("__toks"))
-        sh = F.array_distinct(word_ngrams(F.col("__toks"), k))
+    ).select("id", tokenize("__text").alias("__toks"))
+    sh = F.array_distinct(word_ngrams(F.col("__toks"), k))
     return base.select("id", F.explode(sh).alias("shingle"))
-
-
-def shingle_table(
-    df: DataFrame, id_col: str, text_col: str, k: int = 3, char_level: bool = False
-) -> DataFrame:
-    """-> (id, shingle) distinct word-k-gram (or char-k) shingles."""
-    return shingle_pairs(df, id_col, text_col, k=k, char_level=char_level).distinct()
-
-
-def minhash_signatures(
-    shingles: DataFrame, n_hashes: int = 8
-) -> DataFrame:
-    """(id, shingle) -> (id, seed, minhash); seed in [0, n_hashes).
-
-    All n_hashes minima are computed in ONE hash aggregate over the shingle
-    table (map-side combinable, no seed crossJoin / row blowup); the wide
-    row is unpivoted with ``stack`` afterwards — at web scale the shuffle
-    carries |docs| rows, not |docs| x |shingles| x n_hashes.
-    """
-    aggs = [
-        F.min(stable_hash32(F.col("shingle"), seed=s)).alias(f"m{s}")
-        for s in range(n_hashes)
-    ]
-    wide = shingles.groupBy("id").agg(*aggs)
-    stack = ", ".join(f"{s}L, m{s}" for s in range(n_hashes))
-    return wide.selectExpr(
-        "id", f"stack({n_hashes}, {stack}) as (seed, minhash)"
-    )
 
 
 def minhash_wide(shingles: DataFrame, n_hashes: int = 8) -> DataFrame:
     """(id, shingle) pairs -> (id, m0..m{n-1}) wide minhash row: all
     n_hashes md5 minima in ONE codegen'd hash aggregate. Accepts
     shingle_pairs output (NOT globally deduped): duplicate (id, shingle)
-    rows cannot change a minimum, so this is bit-identical to
-    minhash_signatures(shingle_table(...)) with the full exploded
-    (id, shingle) dedup shuffle removed — partial map-side aggregation
-    means the exchange carries ~n_hashes ints per (doc, map task), not the
+    rows cannot change a minimum, so no exploded (id, shingle) dedup
+    shuffle is needed — partial map-side aggregation means the exchange carries ~n_hashes ints per (doc, map task), not the
     exploded shingle rows (guide §2.3: aggregate before you shuffle). Docs
-    with no shingles produce no row, like the explode form.
+    with no shingles produce no row.
     """
     aggs = [
         F.min(stable_hash32(F.col("shingle"), seed=s)).alias(f"m{s}")
@@ -132,10 +92,9 @@ def minhash_wide(shingles: DataFrame, n_hashes: int = 8) -> DataFrame:
 def minhash_signatures_fused(
     df: DataFrame, id_col: str, text_col: str, k: int = 3, n_hashes: int = 8
 ) -> DataFrame:
-    """text -> (id, seed, minhash), bit-identical to
-    minhash_signatures(shingle_table(df, ...), n_hashes) with the exploded
-    shingle shuffle removed (guide §2.3/§2.4: the only shuffle left carries
-    one narrow row per doc)."""
+    """text -> (id, seed, minhash); seed in [0, n_hashes). The minima come
+    from minhash_wide, so the only shuffle carries one narrow row per doc
+    (guide §2.3/§2.4); the wide row is unpivoted with ``stack``."""
     wide = minhash_wide(shingle_pairs(df, id_col, text_col, k=k), n_hashes)
     stack = ", ".join(f"{s}L, m{s}" for s in range(n_hashes))
     return wide.selectExpr(
@@ -172,34 +131,6 @@ def _pairs_from_buckets(buckets: DataFrame, max_bucket: int) -> DataFrame:
         .select("id_a", "id_b")
         .distinct()
     )
-
-
-def lsh_candidate_pairs(
-    signatures: DataFrame, bands: int = 4, max_bucket: int = 1000
-) -> DataFrame:
-    """(id, seed, minhash) -> (id_a, id_b) pairs sharing >=1 LSH band.
-
-    band = seed div rows_per_band; bucket key = the band's minhash vector
-    serialized in seed order.
-    """
-    n_hashes = signatures.agg(F.max("seed")).first()[0] + 1
-    rows_per_band = n_hashes // bands
-    buckets = (
-        signatures.withColumn("band", (F.col("seed") / rows_per_band).cast("int"))
-        .groupBy("id", "band")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("seed", "minhash"))
-                    ),
-                    lambda s: s["minhash"].cast("string"),
-                ),
-                "_",
-            ).alias("bucket")
-        )
-    )
-    return _pairs_from_buckets(buckets, max_bucket)
 
 
 def lsh_pairs_from_wide(
@@ -248,12 +179,11 @@ def lsh_candidate_pairs_fused(
     bands: int = 4,
     max_bucket: int = 1000,
 ) -> DataFrame:
-    """text -> (id_a, id_b), bit-identical to
-    lsh_candidate_pairs(minhash_signatures(shingle_table(...))) — the band
-    buckets are serialized straight off the wide minhash row (same
-    seed-order '_'-join), so the signature explode, the (id, band) groupBy
-    shuffle and the max(seed) probe job all disappear (guide §2.4). The
-    wide signature table is localCheckpoint'd so the tokenize+md5 minhash
+    """text -> (id_a, id_b) pairs sharing >=1 LSH band. band b covers seeds
+    [b * n_hashes/bands, (b+1) * n_hashes/bands); its bucket key is those
+    minhashes '_'-joined in seed order, serialized straight off the wide
+    minhash row, so there is no signature explode and no (id, band) groupBy
+    shuffle (guide §2.4). The wide signature table is localCheckpoint'd so the tokenize+md5 minhash
     aggregation runs ONCE instead of once per pair-machinery consumer
     (see lsh_pairs_from_wide); callers that manage checkpoint lifecycle
     themselves should call minhash_wide + lsh_pairs_from_wide directly."""
@@ -369,8 +299,8 @@ def ngram_jaccard_pairs(
     shingle shared by 1M docs would make the self-join quadratic, so
     shingles with df > max_shingle_df are dropped IN-operator (stopword
     semantics — removed from both the index and the set sizes, so jaccard
-    stays internally consistent), mirroring lsh_candidate_pairs'
-    max_bucket cap. Pass None to disable.
+    stays internally consistent), mirroring the LSH pair
+    operators' max_bucket cap. Pass None to disable.
     """
     from pyspark.sql.types import IntegralType
 

@@ -1,18 +1,21 @@
-"""End-to-end pipeline: extract -> candidates -> score -> constrain ->
-decide -> canonicalize -> materialize, with checkpoint-resume at every
-stage boundary (stages/base.py) and per-partition lineage.
+"""End-to-end pipeline: extract -> candidates -> (train_model) -> score ->
+constrain -> predict -> decide -> canonicalize -> materialize, with
+checkpoint-resume at every stage boundary (stages/base.py) and
+per-partition lineage.
 
-This is the north star's four-stage chain; the correctness gate
-(tests/test_pipeline.py) runs it on a corpus with the reference's DBP-Lit
-quads planted into file content and asserts P/R >= 0.95 of the emitted
-triple set plus per-row content-sha256 survival.
+Two gates run the whole chain on a corpus with quads planted into file
+content and assert P/R >= 0.95 of the emitted triple set, hits@k / MRR,
+recall@5, per-row content-sha256 survival, lineage rows and
+kill-and-resume: tests/test_pipeline_synth.py on ``synth.synthetic_quads``
+(needs no fixture) and tests/test_pipeline.py on the reference's DBP-Lit
+quads.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from .. import ml
 from .base import PipelineContext
 from .candidates import generate_candidates
 from .canonicalize import apply_canonical, canonicalize
@@ -37,22 +40,16 @@ def run_pipeline(
     workdir: str,
     threshold: float = 0.9,
     num_partitions: int = 32,
-    force: bool = False,
     kge_entity_rows: int | None = None,
-    vector_features: bool = False,
-    learn_weights: bool = True,
 ) -> PipelineContext:
     """Returns the context; final graph at ctx.ran[-1].df.
 
-    learn_weights=True (the default — the measured pipeline IS the shipped
-    train-then-predict pipeline) trains the M8 plausibility logistic on
+    The train_model stage fits the M8 plausibility logistic on
     self-supervised KB pos/neg pairs (ml.train_plausibility_weights — the
-    reference's shape, util_nn.py:11-108) as its own checkpointed stage,
-    replacing the shipped default weights. Training reads only the KB +
-    KGE, so it runs on the helper pool and overlaps the extract ->
-    candidates leg (guide §2.6); the score stage blocks on the trained
-    weights only when it actually starts. Repeat pipelines that persist
-    the tiny weight table pass learn_weights=False and model_w back in.
+    reference's shape, util_nn.py:11-108) and the score stage uses those
+    weights. Training reads only the KB + KGE, so it runs on the helper
+    pool and overlaps the extract -> candidates leg (guide §2.6); the score
+    stage blocks on the trained weights only when it actually starts.
 
     The helper pool's Spark jobs run in one job group per helper. If any
     stage raises, queued helpers never start, the running ones' job groups
@@ -60,7 +57,7 @@ def run_pipeline(
     """
     from concurrent.futures import ThreadPoolExecutor, wait
 
-    ctx = PipelineContext(spark=spark, workdir=workdir, force=force)
+    ctx = PipelineContext(spark=spark, workdir=workdir)
     sc = spark.sparkContext
     canon_pool = ThreadPoolExecutor(max_workers=4)
     helpers = {}
@@ -107,23 +104,21 @@ def run_pipeline(
                 kb["kb_triples"], kb["entity_class"], kb["class_ancestor"]
             ).localCheckpoint()
         )
-        f_model = None
-        if learn_weights:
-            from ..ml import train_plausibility_weights, weights_to_df
-
-            f_model = helper(
+        # the trainer is looked up on ``ml`` when the stage runs, so a
+        # wrapper installed on the module (perfbench tracing) sees the call
+        f_model = helper(
+            "train_model",
+            lambda: ctx.stage(
                 "train_model",
-                lambda: ctx.stage(
-                    "train_model",
-                    lambda: weights_to_df(
-                        spark,
-                        train_plausibility_weights(
-                            kb["kb_triples"], kb["entity_label"], kge,
-                            kge_entity_rows=kge_entity_rows,
-                        ),
+                lambda: ml.weights_to_df(
+                    spark,
+                    ml.train_plausibility_weights(
+                        kb["kb_triples"], kb["entity_label"], kge,
+                        kge_entity_rows=kge_entity_rows,
                     ),
                 ),
-            )
+            ),
+        )
 
         assertions = ctx.stage(
             "extract",
@@ -139,31 +134,24 @@ def run_pipeline(
         )
 
         def _score() -> DataFrame:
-            model_w = None
-            if f_model is not None:
-                from ..ml import weights_from_df
-
-                # blocks only if training hasn't finished overlapping the
-                # extract -> candidates leg (a bounded driver-side fit)
-                model_w = weights_from_df(f_model.result())
+            # blocks only if training hasn't finished overlapping the
+            # extract -> candidates leg (a bounded driver-side fit)
+            model_w = ml.weights_from_df(f_model.result())
             return score_candidates(
                 assertions, cand, kb["kb_triples"], kge,
                 entity_class=kb.get("entity_class"),
-                vector_features=vector_features,
                 kge_entity_rows=kge_entity_rows,
                 model_w=model_w,
             )
 
-        # vector_features=False default: the stand-in model carries ZERO
-        # weights for the M2 block, so materializing the dense/sparse vectors
-        # here buys no accuracy and costs two KB-sized shuffles + an Arrow
-        # pass — pure waste in the throughput pipeline. Deployments with a
-        # trained checkpoint (nonzero block weights) pass True; the full
-        # M2->M8 path is value-oracled (q:linkfeat_vector,
-        # q:linkfeat_sparse_indices) and tested at |P|=1,958
-        # (tests/test_score_vectors.py). kge_entity_rows is threaded from
-        # caller metadata (Iceberg manifest / stage lineage) — saves the
-        # broadcast-budget probe job.
+        # score_candidates' default vector_features=False: the trained model
+        # carries ZERO weights for the M2 block, so materializing the
+        # dense/sparse vectors here buys no accuracy and costs two KB-sized
+        # shuffles + an Arrow pass. The full M2->M8 path is value-oracled
+        # (q:linkfeat_vector, q:linkfeat_sparse_indices) and tested at
+        # |P|=1,958 (tests/test_score_vectors.py). kge_entity_rows is
+        # threaded from caller metadata (Iceberg manifest / stage lineage)
+        # — saves the broadcast-budget probe job.
         scored = ctx.stage("score", _score)
 
         def _constrain() -> DataFrame:

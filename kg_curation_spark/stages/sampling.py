@@ -121,7 +121,6 @@ def negative_samples(
     entity_pool: DataFrame,
     attempts: int = 5,
     corrupt: str = "o",
-    pool_rows: int | None = None,
 ) -> DataFrame:
     """-> (s, p, o, attempt) corrupted triples NOT present in the KB.
 
@@ -138,16 +137,12 @@ def negative_samples(
     serial-build / ship-everywhere failure. Above the budget the join
     shuffles on ``eid``, a uniform dense-id key, at full parallelism.
 
-    pool_rows: distinct-entity count from caller metadata (Iceberg
-    manifest / stage lineage — the kge_entity_rows pattern). Without it
-    the pool lineage used to run THREE times (dictionary_encode's sizing
-    count, its boundary sample, and the n_pool count over the encoded
-    output); the count is now taken once on the raw distinct pool and
-    threaded into dictionary_encode's approx_rows — identical n_pool and
-    identical dense ids, one fewer full pass either way.
+    The distinct pool is counted once and that count is threaded into
+    dictionary_encode's approx_rows, so the pool lineage is not counted
+    again for the sizing or for n_pool.
     """
     distinct_pool = entity_pool.select(F.col("entity")).distinct()
-    n_pool = pool_rows if pool_rows is not None else distinct_pool.count()
+    n_pool = distinct_pool.count()
     pool = dictionary_encode(
         distinct_pool, "entity", "eid", approx_rows=n_pool
     )

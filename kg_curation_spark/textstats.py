@@ -9,7 +9,7 @@ with margin -> 'und' fallback).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .functions.text import normalize_text, stable_hash32, tokenize
@@ -20,10 +20,6 @@ LANG_MARKERS = {
     "fr": ["le", "et", "la", "est", "les"],
     "es": ["el", "de", "la", "es", "los"],
 }
-
-
-def token_count(text: Column | str) -> Column:
-    return F.size(tokenize(text))
 
 
 def quality_features(df: DataFrame, id_col: str, text_col: str) -> DataFrame:

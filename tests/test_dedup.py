@@ -6,10 +6,10 @@ import pyspark.sql.functions as F
 
 from kg_curation_spark.operators.dedup import (
     exact_dedup,
-    lsh_candidate_pairs,
-    minhash_signatures,
+    lsh_candidate_pairs_fused,
+    minhash_signatures_fused,
     ngram_jaccard_pairs,
-    shingle_table,
+    shingle_pairs,
     simhash64,
 )
 
@@ -34,8 +34,7 @@ def test_exact_dedup_groups_identical(spark):
 
 
 def test_minhash_identical_signatures(spark):
-    sh = shingle_table(_docs(spark), "doc_id", "text", k=3)
-    sig = minhash_signatures(sh, n_hashes=8).collect()
+    sig = minhash_signatures_fused(_docs(spark), "doc_id", "text", k=3, n_hashes=8).collect()
     by_doc = {}
     for r in sig:
         by_doc.setdefault(r["id"], {})[r["seed"]] = r["minhash"]
@@ -45,10 +44,11 @@ def test_minhash_identical_signatures(spark):
 
 
 def test_lsh_finds_near_dup_pair(spark):
-    sh = shingle_table(_docs(spark), "doc_id", "text", k=3)
     pairs = {
         (r["id_a"], r["id_b"])
-        for r in lsh_candidate_pairs(minhash_signatures(sh, 8), bands=4).collect()
+        for r in lsh_candidate_pairs_fused(
+            _docs(spark), "doc_id", "text", k=3, n_hashes=8, bands=4
+        ).collect()
     }
     assert (1, 2) in pairs
     assert (1, 3) in pairs or (2, 3) in pairs
@@ -56,7 +56,7 @@ def test_lsh_finds_near_dup_pair(spark):
 
 
 def test_ngram_jaccard_scores(spark):
-    sh = shingle_table(_docs(spark), "doc_id", "text", k=3)
+    sh = shingle_pairs(_docs(spark), "doc_id", "text", k=3)
     pairs = {(r["id_a"], r["id_b"]): r["jaccard"]
              for r in ngram_jaccard_pairs(sh, tau=0.2).collect()}
     assert pairs[(1, 2)] == 1.0
@@ -84,7 +84,7 @@ def test_ngram_jaccard_shingle_df_cap_defuses_skew(spark):
             for i in range(200)]
     rows.append((900, "common boiler plate unique1 token1 word1 extra1"))  # near-dup of 1
     docs = spark.createDataFrame(rows, "doc_id int, text string")
-    sh = shingle_table(docs, "doc_id", "text", k=3)
+    sh = shingle_pairs(docs, "doc_id", "text", k=3)
     pairs = ngram_jaccard_pairs(sh, tau=0.3, max_shingle_df=50).collect()
     got = {(r["id_a"], r["id_b"]) for r in pairs}
     assert got == {(1, 900)}  # the 'common boiler plate' shingle paired nothing
@@ -118,8 +118,6 @@ def test_ngram_jaccard_string_ids_match_packed_path(spark):
     """The packed-pair-key fast path only engages for bounded integral
     ids; string ids must take the generic path and produce identical
     scores (same pairs, same jaccard)."""
-    from kg_curation_spark.operators.dedup import shingle_table
-
     ints = _docs(spark)
     strs = ints.select(
         F.format_string("d%05d", "doc_id").alias("doc_id"), "text"
@@ -127,13 +125,13 @@ def test_ngram_jaccard_string_ids_match_packed_path(spark):
     by_int = {
         (f"d{r['id_a']:05d}", f"d{r['id_b']:05d}"): r["jaccard"]
         for r in ngram_jaccard_pairs(
-            shingle_table(ints, "doc_id", "text", k=3), tau=0.2
+            shingle_pairs(ints, "doc_id", "text", k=3), tau=0.2
         ).collect()
     }
     by_str = {
         (r["id_a"], r["id_b"]): r["jaccard"]
         for r in ngram_jaccard_pairs(
-            shingle_table(strs, "doc_id", "text", k=3), tau=0.2
+            shingle_pairs(strs, "doc_id", "text", k=3), tau=0.2
         ).collect()
     }
     assert by_int == by_str and by_int
@@ -144,13 +142,11 @@ def test_ngram_jaccard_broadcast_gates_fall_back_to_shuffle(spark):
     prune and the post-aggregate size probes) read the session's byte
     budget: at the default they broadcast, at -1 both take their shuffle
     fallbacks — with identical scores."""
-    from kg_curation_spark.operators.dedup import shingle_table
-
     rows = [(i, " ".join(f"w{i}x{j}" for j in range(12)) + " shared words here")
             for i in range(40)]
     rows += [(100 + i, rows[i][1] + " tail") for i in range(0, 40, 5)]
     docs = spark.createDataFrame(rows, "doc_id int, text string")
-    sh = shingle_table(docs, "doc_id", "text", k=3)
+    sh = shingle_pairs(docs, "doc_id", "text", k=3)
 
     def run():
         out = ngram_jaccard_pairs(sh, tau=0.2, max_shingle_df=None)

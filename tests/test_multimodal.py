@@ -1,8 +1,6 @@
-"""Multimodal binary-column plumbing (decode stubbed per environment)."""
+"""Multimodal binary-column plumbing (sha256 stand-in decode)."""
 
 from __future__ import annotations
-
-import pytest
 
 from kg_curation_spark.multimodal import FEATURE_DIM, asset_table, extract_features
 
@@ -18,448 +16,13 @@ def _media(spark):
 def test_binary_schema_and_features(spark):
     media = _media(spark)
     assert dict(media.dtypes)["payload"] == "binary"
-    rows = {r["media_id"]: r for r in extract_features(media, fake_decode=True).collect()}
+    rows = {r["media_id"]: r for r in extract_features(media).collect()}
     assert rows["m0"]["kind"] == "image" and rows["m1"]["kind"] == "audio"
     assert rows["m0"]["n_bytes"] == len(b"alpha")
     assert all(len(r["feature"]) == FEATURE_DIM for r in rows.values())
 
 
 def test_fake_decode_deterministic(spark):
-    a = extract_features(_media(spark), fake_decode=True).collect()
-    b = extract_features(_media(spark), fake_decode=True).collect()
+    a = extract_features(_media(spark)).collect()
+    b = extract_features(_media(spark)).collect()
     assert sorted(map(str, a)) == sorted(map(str, b))
-
-
-def test_real_decode_raises_for_compressed_formats(spark):
-    # the synthetic asset table's fake mimes have no pure-python decoder
-    with pytest.raises(Exception, match="NotImplementedError|PIL/ffmpeg"):
-        extract_features(_media(spark), fake_decode=False).collect()
-
-
-def _wav_bytes(rate=8000, freq=440.0, n=800) -> bytes:
-    """A real 16-bit mono WAV payload, stdlib-encoded."""
-    import io
-    import math
-    import struct
-    import wave
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(rate)
-        samples = [
-            int(0.5 * 32767 * math.sin(2 * math.pi * freq * i / rate))
-            for i in range(n)
-        ]
-        w.writeframes(struct.pack(f"<{n}h", *samples))
-    return buf.getvalue()
-
-
-def _bmp_bytes(w=4, h=2) -> bytes:
-    """A real uncompressed 24-bpp bottom-up BMP: red left half, blue right."""
-    stride = ((w * 3 + 3) // 4) * 4
-    pixels = bytearray()
-    for _y in range(h):  # bottom-up rows
-        row = bytearray()
-        for x in range(w):
-            row += bytes([255, 0, 0] if x >= w // 2 else [0, 0, 255])  # BGR
-        row += b"\x00" * (stride - len(row))
-        pixels += row
-    header = (
-        b"BM"
-        + (54 + len(pixels)).to_bytes(4, "little")
-        + b"\x00\x00\x00\x00"
-        + (54).to_bytes(4, "little")
-        + (40).to_bytes(4, "little")
-        + w.to_bytes(4, "little")
-        + h.to_bytes(4, "little")
-        + (1).to_bytes(2, "little")
-        + (24).to_bytes(2, "little")
-        + (0).to_bytes(4, "little")
-        + len(pixels).to_bytes(4, "little")
-        + b"\x00" * 16
-    )
-    return bytes(header + pixels)
-
-
-def test_real_wav_and_bmp_decode_end_to_end(spark):
-    """REAL decode (no stub): a stdlib-encoded WAV and a handcrafted BMP
-    round-trip through the same Arrow mapInPandas plumbing."""
-    ppm = b"P6\n# cmt\n2 2\n255\n" + bytes(
-        [255, 255, 255, 0, 0, 0, 0, 0, 0, 255, 255, 255]
-    )
-    media = spark.createDataFrame(
-        [
-            ("w1", "audio", "audio/wav", _wav_bytes()),
-            ("i1", "image", "image/bmp", _bmp_bytes()),
-            ("i2", "image", "image/x-portable-pixmap", ppm),
-        ],
-        "media_id string, kind string, mime string, payload binary",
-    )
-    rows = {r["media_id"]: r for r in extract_features(media, fake_decode=False).collect()}
-    # WAV: [duration_s, rate_khz, channels, rms, zcr, mean, max, min]
-    wf = rows["w1"]["feature"]
-    assert abs(wf[0] - 800 / 8000) < 1e-6 and wf[1] == 8.0 and wf[2] == 1.0
-    assert abs(wf[3] - 0.5 / 2**0.5) < 0.01  # sine RMS = A/sqrt(2)
-    assert 0.3 < wf[7] < 0.51 or wf[7] < -0.3  # swings negative
-    # BMP: [w, h, ch, mean_r, mean_g, mean_b, luma_mean, luma_std]
-    bf = rows["i1"]["feature"]
-    assert bf[:3] == [4.0, 2.0, 3.0]
-    assert abs(bf[3] - 0.5) < 1e-6 and bf[4] == 0.0 and abs(bf[5] - 0.5) < 1e-6
-    # PPM: 2 white + 2 black pixels -> channel means 0.5
-    pf = rows["i2"]["feature"]
-    assert pf[:3] == [2.0, 2.0, 3.0] and abs(pf[3] - 0.5) < 1e-6
-
-
-def test_decode_media_direct():
-    """Decoder unit checks without Spark: values, not just shapes."""
-    import numpy as np
-
-    from kg_curation_spark.multimodal import decode_media
-
-    bf = decode_media(_bmp_bytes(w=3, h=3), "image/bmp")
-    assert bf[0] == 3.0 and bf[1] == 3.0
-    wf = decode_media(_wav_bytes(n=160), "audio/wav")
-    assert abs(wf[0] - 160 / 8000) < 1e-6
-    assert np.all(np.isfinite(wf))
-    with pytest.raises(NotImplementedError):
-        decode_media(b"\x00\x00\x00\x18ftypmp42 fake mp4", "video/mp4")
-
-
-def _png_bytes(px, filters, ctype=2):
-    """Encode rows of (r, g, b[, a]) tuples as a real PNG, one filter type
-    per row, so the decoder's unfilter paths are all exercised."""
-    import struct
-    import zlib
-
-    h, w = len(px), len(px[0])
-    nch = {2: 3, 6: 4}[ctype]
-
-    def chunk(typ, data):
-        return (
-            struct.pack(">I", len(data))
-            + typ
-            + data
-            + struct.pack(">I", zlib.crc32(typ + data))
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, ctype, 0, 0, 0)
-    raw = bytearray()
-    prev = [0] * (w * nch)
-    for y, f in zip(range(h), filters):
-        line = [c for p in px[y] for c in p]
-        raw.append(f)
-        for i in range(w * nch):
-            a = line[i - nch] if i >= nch else 0
-            b = prev[i]
-            c = prev[i - nch] if i >= nch else 0
-            if f == 0:
-                e = line[i]
-            elif f == 1:
-                e = (line[i] - a) & 0xFF
-            elif f == 2:
-                e = (line[i] - b) & 0xFF
-            elif f == 3:
-                e = (line[i] - ((a + b) >> 1)) & 0xFF
-            else:
-                pa, pb, pc = abs(b - c), abs(a - c), abs(a + b - 2 * c)
-                pr = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                e = (line[i] - pr) & 0xFF
-            raw.append(e)
-        prev = line
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + chunk(b"IEND", b"")
-    )
-
-
-def test_png_decode_all_filter_types():
-    """Real PNG decode: gradient pixels encoded with every filter type
-    (None/Sub/Up/Average/Paeth) must reconstruct exactly — compare the
-    decoded feature vector to one computed from the ground-truth array."""
-    import numpy as np
-
-    from kg_curation_spark.multimodal import _pixel_feature, decode_media
-
-    h, w = 5, 7
-    px = [
-        [((x * 37 + y * 11) % 256, (x * 5 + 3) % 256, (y * 7 + 90) % 256) for x in range(w)]
-        for y in range(h)
-    ]
-    payload = _png_bytes(px, filters=[0, 1, 2, 3, 4])
-    got = decode_media(payload, "image/png")
-    want = _pixel_feature(np.array(px, dtype=np.uint8), w, h)
-    assert np.allclose(got, want), (got, want)
-
-
-def test_png_decode_rgba_alpha_dropped():
-    import numpy as np
-
-    from kg_curation_spark.multimodal import _pixel_feature, decode_media
-
-    px = [
-        [(200, 10, 40, 128), (0, 255, 0, 7)],
-        [(15, 15, 15, 255), (255, 255, 255, 0)],
-    ]
-    payload = _png_bytes(px, filters=[4, 1], ctype=6)
-    got = decode_media(payload, "image/png")
-    rgb = np.array(px, dtype=np.uint8)[..., :3]
-    want = _pixel_feature(rgb, 2, 2)
-    assert np.allclose(got, want)
-
-
-def test_png_interlaced_and_16bit_still_declared_gap():
-    import struct
-    import zlib
-
-    from kg_curation_spark.multimodal import decode_media
-
-    def mk(depth, interlace):
-        ihdr = struct.pack(">IIBBBBB", 1, 1, depth, 2, 0, 0, interlace)
-        c = (
-            struct.pack(">I", len(ihdr))
-            + b"IHDR"
-            + ihdr
-            + struct.pack(">I", zlib.crc32(b"IHDR" + ihdr))
-        )
-        idat = zlib.compress(b"\x00\x00\x00\x00")
-        c2 = (
-            struct.pack(">I", len(idat))
-            + b"IDAT"
-            + idat
-            + struct.pack(">I", zlib.crc32(b"IDAT" + idat))
-        )
-        return b"\x89PNG\r\n\x1a\n" + c + c2
-
-    with pytest.raises(NotImplementedError):
-        decode_media(mk(16, 0), "image/png")
-    with pytest.raises(NotImplementedError):
-        decode_media(mk(8, 1), "image/png")
-
-
-# ---------- JPEG: spec-table encoder (test-side) + decoder tests ----------
-
-_JPEG_DC_BITS = [0, 0, 0, 12] + [0] * 12  # 12 categories, all length-4 codes
-_JPEG_DC_VALS = list(range(12))
-_JPEG_AC_VALS = [0x00, 0xF0] + [
-    (r << 4) | s for r in range(16) for s in range(1, 11)
-]
-_JPEG_AC_BITS = [0] * 7 + [len(_JPEG_AC_VALS)] + [0] * 8  # all length-8 codes
-
-
-class _BitWriter:
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def put(self, value, nbits):
-        for i in range(nbits - 1, -1, -1):
-            self.acc = (self.acc << 1) | ((value >> i) & 1)
-            self.n += 1
-            if self.n == 8:
-                self.out.append(self.acc)
-                if self.acc == 0xFF:
-                    self.out.append(0x00)  # byte stuffing
-                self.acc = 0
-                self.n = 0
-
-    def flush(self):
-        while self.n:
-            self.put(1, 1)  # pad with 1-bits
-
-
-def _jpeg_category(x):
-    return 0 if x == 0 else int(abs(x)).bit_length()
-
-
-def _jpeg_bytes(rgb, sampling=(1, 1), restart_interval=0, gray=False):
-    """Minimal baseline JPEG encoder: flat quant table (all ones), Annex-C
-    canonical Huffman tables built from the BITS/HUFFVAL above, sampling =
-    (H, V) for luma (chroma always 1x1) — (1,1) = 4:4:4, (2,2) = 4:2:0."""
-    import struct
-
-    import numpy as np
-
-    from kg_curation_spark.jpeg import ZIGZAG, build_huffman_codes, fdct_8x8
-
-    dc_codes = {v: k for k, v in build_huffman_codes(_JPEG_DC_BITS, _JPEG_DC_VALS).items()}
-    ac_codes = {v: k for k, v in build_huffman_codes(_JPEG_AC_BITS, _JPEG_AC_VALS).items()}
-
-    rgb = np.asarray(rgb, dtype="float64")
-    h, w = rgb.shape[:2]
-    r, g, b = rgb[..., 0], rgb[..., 1], rgb[..., 2]
-    y = 0.299 * r + 0.587 * g + 0.114 * b
-    cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
-    cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
-
-    hs, vs = sampling
-    if gray:
-        comps = [(1, 1, 1, y)]
-    else:
-        # chroma subsample by simple decimation (decoder upsamples by repeat)
-        comps = [(1, hs, vs, y), (2, 1, 1, cb[::vs, ::hs]), (3, 1, 1, cr[::vs, ::hs])]
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    mcus_x = -(-w // (8 * hmax))
-    mcus_y = -(-h // (8 * vmax))
-
-    padded = []
-    for cid, hc, vc, plane in comps:
-        ph, pw = mcus_y * vc * 8, mcus_x * hc * 8
-        pl = np.zeros((ph, pw))
-        pl[: plane.shape[0], : plane.shape[1]] = plane
-        pl[plane.shape[0] :, : plane.shape[1]] = plane[-1:, :]  # edge pad
-        pl[:, plane.shape[1] :] = pl[:, plane.shape[1] - 1 : plane.shape[1]]
-        padded.append((cid, hc, vc, pl))
-
-    wtr = _BitWriter()
-    pred = {cid: 0 for cid, _, _, _ in padded}
-    segs = bytearray()
-    mcu = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                wtr.flush()
-                segs += wtr.out
-                segs += bytes([0xFF, 0xD0 + ((mcu // restart_interval - 1) % 8)])
-                wtr = _BitWriter()
-                pred = {cid: 0 for cid in pred}
-            for cid, hc, vc, pl in padded:
-                for by in range(vc):
-                    for bx in range(hc):
-                        y0, x0 = (my * vc + by) * 8, (mx * hc + bx) * 8
-                        blk = pl[y0 : y0 + 8, x0 : x0 + 8] - 128.0
-                        q = np.round(fdct_8x8(blk)).astype(int)  # flat table
-                        dc = int(q[0, 0])
-                        diff = dc - pred[cid]
-                        pred[cid] = dc
-                        t = _jpeg_category(diff)
-                        ln, code = dc_codes[t]
-                        wtr.put(code, ln)
-                        if t:
-                            wtr.put(diff if diff > 0 else diff + (1 << t) - 1, t)
-                        zz = [int(q[v, u]) for v, u in ZIGZAG]
-                        k = 1
-                        while k < 64:
-                            run = 0
-                            while k < 64 and zz[k] == 0:
-                                run += 1
-                                k += 1
-                            if k == 64:
-                                ln, code = ac_codes[0x00]  # EOB
-                                wtr.put(code, ln)
-                                break
-                            while run >= 16:
-                                ln, code = ac_codes[0xF0]  # ZRL
-                                wtr.put(code, ln)
-                                run -= 16
-                            s = _jpeg_category(zz[k])
-                            ln, code = ac_codes[(run << 4) | s]
-                            wtr.put(code, ln)
-                            wtr.put(zz[k] if zz[k] > 0 else zz[k] + (1 << s) - 1, s)
-                            k += 1
-            mcu += 1
-    wtr.flush()
-    segs += wtr.out
-
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    dqt = seg(0xDB, bytes([0x00]) + bytes([1] * 64))  # table 0, flat
-    ncomp = 1 if gray else 3
-    sof_body = struct.pack(">BHHB", 8, h, w, ncomp)
-    for cid, hc, vc, _ in padded:
-        sof_body += bytes([cid, (hc << 4) | vc, 0])
-    sof = seg(0xC0, sof_body)
-    dht = seg(
-        0xC4,
-        bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-        + bytes([0x10]) + bytes(_JPEG_AC_BITS) + bytes(_JPEG_AC_VALS),
-    )
-    dri = seg(0xDD, struct.pack(">H", restart_interval)) if restart_interval else b""
-    sos_body = bytes([ncomp])
-    for cid, _, _, _ in padded:
-        sos_body += bytes([cid, 0x00])
-    sos_body += bytes([0, 63, 0])
-    sos = seg(0xDA, sos_body)
-    return (
-        b"\xff\xd8" + dqt + sof + dht + dri + sos + bytes(segs) + b"\xff\xd9"
-    )
-
-
-def _gradient_rgb(w, h):
-    import numpy as np
-
-    xs = np.arange(w)[None, :]
-    ys = np.arange(h)[:, None]
-    return np.stack(
-        [
-            (xs * 9 + ys * 3) % 256 + 0 * ys,
-            (xs * 2 + 7) % 256 + 0 * ys,
-            (ys * 5 + 40) % 256 + 0 * xs,
-        ],
-        axis=2,
-    ).astype("uint8")
-
-
-def test_jpeg_roundtrip_444():
-    import numpy as np
-
-    from kg_curation_spark.jpeg import decode_jpeg
-
-    src = _gradient_rgb(24, 16)
-    got = decode_jpeg(_jpeg_bytes(src))
-    assert got.shape == (16, 24, 3)
-    # flat quant table: error budget is DCT rounding (+-0.5/coef) plus the
-    # YCbCr round-trip — a few counts per pixel
-    assert np.max(np.abs(got.astype(int) - src.astype(int))) <= 6
-
-
-def test_jpeg_roundtrip_grayscale_and_restart():
-    import numpy as np
-
-    from kg_curation_spark.jpeg import decode_jpeg
-
-    src = _gradient_rgb(17, 9)  # non-multiple-of-8 dims exercise padding
-    luma = np.round(
-        0.299 * src[..., 0] + 0.587 * src[..., 1] + 0.114 * src[..., 2]
-    ).astype("uint8")
-    got = decode_jpeg(_jpeg_bytes(src, restart_interval=2, gray=True))
-    assert got.shape == (9, 17, 3)
-    assert np.max(np.abs(got[..., 0].astype(int) - luma.astype(int))) <= 4
-    assert np.array_equal(got[..., 0], got[..., 1])
-
-
-def test_jpeg_roundtrip_420_subsampled():
-    import numpy as np
-
-    from kg_curation_spark.jpeg import decode_jpeg
-
-    # piecewise-constant 16x16 tiles: chroma is constant inside each 2x2
-    # decimation window, so 4:2:0 loses nothing
-    tiles = np.array([[(200, 30, 60), (10, 220, 90)], [(70, 80, 240), (5, 5, 5)]])
-    src = np.repeat(np.repeat(tiles, 16, axis=0), 16, axis=1).astype("uint8")
-    got = decode_jpeg(_jpeg_bytes(src, sampling=(2, 2)))
-    assert got.shape == (32, 32, 3)
-    assert np.max(np.abs(got.astype(int) - src.astype(int))) <= 6
-
-
-def test_jpeg_decode_media_feature_and_progressive_gap():
-    import numpy as np
-
-    from kg_curation_spark.multimodal import _pixel_feature, decode_media
-
-    src = _gradient_rgb(24, 16)
-    feat = decode_media(_jpeg_bytes(src), "image/jpeg")
-    want = _pixel_feature(src, 24, 16)
-    assert feat[0] == 24.0 and feat[1] == 16.0
-    assert np.allclose(feat[3:], want[3:], atol=0.02)
-    # progressive (SOF2) stays a declared gap
-    payload = _jpeg_bytes(src)
-    prog = payload.replace(b"\xff\xc0", b"\xff\xc2", 1)
-    with pytest.raises(NotImplementedError):
-        decode_media(prog, "image/jpeg")

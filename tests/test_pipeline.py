@@ -27,10 +27,9 @@ def fixture_world(spark, tmp_path_factory):
         synth.build_kge(quads.toPandas()), "id string, kind string, vec array<float>"
     ).cache()
     wd = str(tmp_path_factory.mktemp("kgpipe"))
-    # learn_weights=True: every gate below (P/R, hits@k, MRR, recall@k,
-    # sha survival) holds with LEARNED plausibility weights, not the
-    # shipped default vector
-    ctx = run_pipeline(spark, corpus, kb, kge, wd, learn_weights=True)
+    # every gate below (P/R, hits@k, MRR, recall@k, sha survival) holds
+    # with LEARNED plausibility weights (the train_model stage)
+    ctx = run_pipeline(spark, corpus, kb, kge, wd)
     yield {"quads": quads, "corpus": corpus, "kb": kb, "kge": kge,
            "wd": wd, "ctx": ctx}
     shutil.rmtree(wd, ignore_errors=True)
