@@ -2,7 +2,7 @@
 
 entry(spark)   — flagship: plant assertions into a repos-shaped corpus built
                  from sf0.001 documents, run the real extract stage
-                 (Arrow mapInPandas), aggregate triples per predicate.
+                 (a JVM regex), aggregate triples per predicate.
 queries()      — one entry per implemented operator from SURVEY.md §2
                  (plus the training-data-pipeline ops), each with a DuckDB
                  oracle in oracle_sql() unless genuinely non-SQL.

@@ -8,8 +8,11 @@ DataFrame stage chain:
 
 Design rules (enforced throughout):
   * DataFrame / Spark SQL only; no RDDs.
-  * Python touches data only through Arrow-batched pandas UDFs
-    (``mapInPandas`` / ``pandas_udf``) — never per-row Python.
+  * The default pipeline (stages/pipeline.py) runs only in the JVM:
+    extraction is a ``regexp_extract_all`` expression and scoring is
+    native Column arithmetic. Elsewhere Python touches data only through
+    Arrow-batched pandas UDFs (``mapInPandas`` / ``pandas_udf``) — never
+    per-row Python.
   * Every stage is DataFrame -> DataFrame with a declared schema, a
     checkpointed parquet sink, and per-partition lineage rows (stages/base.py).
   * Hot-key skew handled with explicit salting helpers (operators/salt.py);

@@ -17,8 +17,6 @@ from pyspark.sql import DataFrame
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
-    if df.isStreaming:  # partition probing needs an RDD; streams keep theirs
-        return df
     target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)

@@ -14,7 +14,7 @@ Lineage is fused into the write job itself — no extra Spark jobs:
     information an Iceberg manifest carries per data file, so on a real
     cluster this becomes a manifest read, not a scan).
 Each stage's lineage lives in its own overwrite-mode file stamped with a
-per-run id, so a force=True rerun or a crash-then-resume can never double
+per-run id, so a rerun or a crash-then-resume can never double
 count rows (previously lineage was append-mode and rows_out summed stale
 runs).
 
@@ -172,7 +172,6 @@ class CatalogTableSink:
 class PipelineContext:
     spark: SparkSession
     workdir: str
-    force: bool = False
     ran: list[StageResult] = field(default_factory=list)
     run_id: str = field(default_factory=lambda: uuid.uuid4().hex[:12])
     sink: object = field(default_factory=ParquetDirSink)
@@ -203,7 +202,7 @@ class PipelineContext:
         downstream shuffle layout is chosen deliberately, not inherited.
         """
         out, marker = self._paths(name)
-        if not self.force and os.path.exists(marker):
+        if os.path.exists(marker):
             df = self.sink.read(self, name)
             with open(marker) as f:
                 rows = json.load(f)["rows_out"]

@@ -3,78 +3,64 @@
 repos(repo, path, commit, lang, content)
     -> triples(subject, predicate, literal, repo, path, commit, content_sha)
 
-The extractor is an Arrow-batched ``mapInPandas`` over the content column:
-one compiled regex applied per pandas batch (vectorized ``str.extractall``),
-never per-row Python (input_hint). Each emitted triple carries
-sha256(content) of its source row — the end-to-end row invariant.
+The extractor is a JVM regex over the whole ``content`` value:
+``regexp_extract_all`` once per capture group, zipped and exploded — pure
+Column expressions, so the stage runs with no Python worker and no Arrow
+round-trip. Each emitted triple carries sha256(content) of its source row —
+the end-to-end row invariant.
 
 Reference semantics being re-expressed: the assertion quads the reference
 reads from DBP-Lit.csv (cache.py:63) are here *recovered from text*, which
 is the north star's stage (1): "extracts candidate (subj, pred, obj)
-triples from file content via vectorized Arrow UDFs wrapping KG_Curation's
-lexical-matching and assertion-extraction logic".
+triples from file content, wrapping KG_Curation's lexical-matching and
+assertion-extraction logic".
 """
 
 from __future__ import annotations
 
-import re
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Matches the planted assertion line shape (FIXTURES.md §2):
 #   KG: <subject-uri> <predicate-uri> "literal" .
-ASSERT_RE = re.compile(r'^KG:\s*<([^>\s]+)>\s*<([^>\s]+)>\s*"([^"\n]*)"\s*\.\s*$', re.M)
-
-EXTRACT_SCHEMA = (
-    "subject string, predicate string, literal string, "
-    "repo string, path string, commit string, content_sha string"
+# The contract is Python's
+#   re.compile(r'^KG:\s*<([^>\s]+)>\s*<([^>\s]+)>\s*"([^"\n]*)"\s*\.\s*$', re.M)
+# spelled for java.util.regex:
+#   (?d)  only "\n" ends a line for ^ and $ (Python ignores "\r", U+2028, …);
+#   (?U)  \s is Unicode White_Space, as Python's str \s;
+#   \x{1c}-\x{1f}  Python's \s also matches these four separators, Java's
+#                  White_Space does not — so each class lists them.
+_WS = r"[\s\x{1c}-\x{1f}]"
+_URI = r"<([^>\s\x{1c}-\x{1f}]+)>"
+ASSERT_PATTERN = (
+    rf'(?mdU)^KG:{_WS}*{_URI}{_WS}*{_URI}{_WS}*"([^"\n]*)"{_WS}*\.{_WS}*$'
 )
-
-
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        content = pdf["content"].fillna("")
-        # vectorized regex over the whole Arrow batch
-        hits = content.str.extractall(ASSERT_RE)
-        if hits.empty:
-            continue
-        hits = hits.rename(columns={0: "subject", 1: "predicate", 2: "literal"})
-        src = pdf.loc[hits.index.get_level_values(0)].reset_index(drop=True)
-        out = hits.reset_index(drop=True)
-        for c in ("repo", "path", "commit", "content_sha"):
-            out[c] = src[c].values
-        yield out
 
 
 def extract_triples_raw(repos: DataFrame) -> DataFrame:
     """Per-file extraction only (no dedup) — shared by the batch stage and
     the streaming path (append-mode streams cannot aggregate without a
-    watermark, so dedup stays batch-side). The regex pass is per-row CPU:
-    floor its parallelism when the scan yields fewer partitions than cores
-    (no-op at scale, and on streams)."""
-    from ..operators.spread import ensure_parallelism
-
-    return ensure_parallelism(
-        repos.select(
-            "repo", "path", "commit", "content",
-            F.sha2("content", 256).alias("content_sha"),
-        )
-    ).mapInPandas(_extract_batches, schema=EXTRACT_SCHEMA)
+    watermark, so dedup stays batch-side). The three group scans walk the
+    same matches in the same order, so ``arrays_zip`` lines them up; a
+    null ``content`` yields no rows."""
+    groups = [
+        F.regexp_extract_all("content", F.lit(ASSERT_PATTERN), i).alias(name)
+        for i, name in enumerate(("subject", "predicate", "literal"), start=1)
+    ]
+    return repos.select(
+        F.inline(F.arrays_zip(*groups)),
+        "repo", "path", "commit",
+        F.sha2("content", 256).alias("content_sha"),
+    )
 
 
 def extract_triples(repos: DataFrame) -> DataFrame:
     """Extract candidate (subject, predicate, literal) triples.
 
-    content_sha is computed JVM-side (``sha2``) before the UDF so the only
-    Python work is the vectorized regex. The scan projects only the columns
-    the UDF needs (column pruning reaches the parquet reader); dedup happens
-    on the triple key while the provenance columns keep one witness row
-    (min-struct agg) — at 100 TB the shuffle key is the triple, not the row.
+    The scan projects only the columns extraction needs (column pruning
+    reaches the parquet reader); dedup happens on the triple key while the
+    provenance columns keep one witness row (min-struct agg) — at 100 TB the
+    shuffle key is the triple, not the row.
     """
     raw = extract_triples_raw(repos)
     # one witness per distinct (s,p,l): map-side combinable min-agg

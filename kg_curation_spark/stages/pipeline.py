@@ -139,19 +139,12 @@ def run_pipeline(
             model_w = ml.weights_from_df(f_model.result())
             return score_candidates(
                 assertions, cand, kb["kb_triples"], kge,
-                entity_class=kb.get("entity_class"),
                 kge_entity_rows=kge_entity_rows,
                 model_w=model_w,
             )
 
-        # score_candidates' default vector_features=False: the trained model
-        # carries ZERO weights for the M2 block, so materializing the
-        # dense/sparse vectors here buys no accuracy and costs two KB-sized
-        # shuffles + an Arrow pass. The full M2->M8 path is value-oracled
-        # (q:linkfeat_vector, q:linkfeat_sparse_indices) and tested at
-        # |P|=1,958 (tests/test_score_vectors.py). kge_entity_rows is
-        # threaded from caller metadata (Iceberg manifest / stage lineage)
-        # — saves the broadcast-budget probe job.
+        # kge_entity_rows is threaded from caller metadata (Iceberg manifest
+        # / stage lineage) — saves the broadcast-budget probe job.
         scored = ctx.stage("score", _score)
 
         def _constrain() -> DataFrame:

@@ -9,12 +9,13 @@ For every (subject, predicate, literal) x candidate entity:
   node_feat    candidate appears >1 times as object of this predicate
                (NodeFeat, util_encode.py:105-127 — J4 count join)
   emb_score    TransE over (subject, predicate, cand) vectors, zeros for
-               missing ids (J10/F8, predict_embedding.py:128-156), batched
-               numpy in a pandas UDF
-  model_score  plausibility inference — deterministic logistic stand-in for
-               the AttBiRNN scorer (M8, util_nn.py:90-108): broadcast weight
-               vector, Arrow-batch matrix multiply via mapInPandas. Training
-               is pluggable/driver-side per SURVEY §2.8 M7.
+               missing ids (J10/F8, predict_embedding.py:128-156)
+  model_score  plausibility inference — logistic stand-in for the AttBiRNN
+               scorer (M8, util_nn.py:90-108) over the trained weights
+               (ml.train_plausibility_weights, SURVEY §2.8 M7).
+
+Both scores are Column expressions (apply_plausibility_native): the stage
+runs with no Python worker.
 
 Output: scored(subject, predicate, literal, literal_norm, entity,
               lex_score, link_feat, node_feat, emb_score, model_score)
@@ -26,10 +27,7 @@ big side shuffles once on each probe key; AQE handles candidate-side skew.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -279,8 +277,6 @@ def graph_feature_vectors_sparse(
     form's sorted-vocabulary positions). They join DISTRIBUTED (broadcast
     when small, shuffle when the vocabulary is huge) — the vocabulary
     never materializes on the driver, unlike the dense form's Python list.
-    A trained checkpoint consumes these via scatter-add in
-    apply_plausibility_model (link_vocab/class_vocab args).
     """
     pidx = property_index.select(F.col("p"), F.col("idx").alias("__pi"))
     edges = kb_triples.select("s", "p", "o").distinct().join(pidx, "p")
@@ -354,109 +350,14 @@ def graph_feature_vectors_sparse(
     return out.drop("__own")
 
 
-def _stack(col: pd.Series, dim: int) -> np.ndarray:
-    out = np.zeros((len(col), dim), dtype="float64")
-    mask = col.notna()
-    if mask.any():
-        out[mask.to_numpy()] = np.stack(col[mask].to_numpy())
-    return out
-
-
-def _score_batches_fn(
-    link_vocab: int | None = None,
-    class_vocab: int | None = None,
-    model_w: "np.ndarray | None" = None,
-):
-    """Factory for the Arrow scorer: TransE (F8) + plausibility logistic
-    (M8) in ONE pass — the vector columns enter Python exactly once.
-
-    link_vocab/class_vocab size the weight vectors for the SPARSE M2 form
-    (link_idx/class_idx active-index arrays): the block contribution is a
-    scatter-gather W[idx].sum() per row instead of a dense matmul.
-
-    model_w: [w_features..., bias] in MODEL_FEATURES order — a LEARNED
-    weight vector (ml.train_plausibility_weights) or None for the shipped
-    default; the array is closure-captured, so Spark serializes it to the
-    executors with the UDF (the broadcast-variable pattern for small
-    weights)."""
-    w_model = MODEL_W if model_w is None else np.asarray(model_w, dtype="float64")
-
-    def _score_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            dim = next(
-                (len(v) for v in pdf["s_vec"] if v is not None), 16
-            )
-            sv = _stack(pdf["s_vec"], dim)
-            rv = _stack(pdf["r_vec"], dim)
-            ov = _stack(pdf["o_vec"], dim)
-            d = np.abs(sv + rv - ov).mean(axis=1)
-            pdf["emb_score"] = 1.0 / (1.0 + np.exp(-1.0 / np.maximum(d, 1e-9)))
-            x = pdf[MODEL_FEATURES].to_numpy(dtype="float64")
-            z = x @ w_model[:-1] + w_model[-1]
-            # M2 vector block enters the same logistic — the contract a
-            # trained checkpoint plugs into. The deterministic stand-in
-            # carries zero weights for the block so the scalar-feature
-            # decision boundary (and the P/R gate) is unchanged.
-            for vc in ("link_vec", "class_vec"):  # dense form
-                if vc in pdf.columns and len(pdf):
-                    v = np.array(pdf[vc].tolist(), dtype="float64")
-                    z = z + v @ np.zeros(v.shape[1], dtype="float64")
-            for ic, vocab in (("link_idx", link_vocab), ("class_idx", class_vocab)):
-                if ic in pdf.columns and vocab and len(pdf):
-                    w_blk = np.zeros(vocab, dtype="float64")  # trained W here
-                    z = z + np.array(
-                        [w_blk[np.asarray(ix, dtype="int64")].sum() for ix in pdf[ic]]
-                    )
-            pdf["model_score"] = 1.0 / (1.0 + np.exp(-z))
-            drop = [
-                c for c in pdf.columns
-                if c.endswith("_vec") or c in ("link_idx", "class_idx")
-            ]
-            yield pdf.drop(columns=drop)
-
-    return _score_batches
-
-
-def apply_plausibility_model(
-    scored: DataFrame,
-    link_vocab: int | None = None,
-    class_vocab: int | None = None,
-    model_w: "np.ndarray | None" = None,
-) -> DataFrame:
-    """Batch inference over Arrow batches (mapInPandas) — M8 surface.
-
-    This is the pluggable slot a trained checkpoint (AttBiRNN / MLP) drops
-    into; the Arrow batch shape is the contract (dense link_vec/class_vec
-    OR sparse link_idx/class_idx + vocab sizes). For the deterministic
-    logistic stand-in prefer ``apply_plausibility_native`` — same formula,
-    zero Python."""
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    keep = [
-        f for f in scored.schema.fields
-        if not f.name.endswith("_vec") and f.name not in ("link_idx", "class_idx")
-    ]
-    schema = StructType(
-        keep
-        + [StructField("emb_score", DoubleType()), StructField("model_score", DoubleType())]
-    )
-    return scored.mapInPandas(
-        _score_batches_fn(link_vocab, class_vocab, model_w), schema=schema
-    )
-
-
 def apply_plausibility_native(
     scored: DataFrame, dim: int = 16, model_w: "np.ndarray | None" = None
 ) -> DataFrame:
     """TransE (F8) + logistic stand-in (M8) as pure Column expressions —
-    whole-stage codegen, no Arrow round-trip.
-
-    Measured motivation: at 16M quads the mapInPandas form ships 3 x dim
-    floats per candidate row through Python for ~10 flops of arithmetic —
-    Arrow (de)serialization saturates memory bandwidth and the score stage
-    stops scaling past ~2x (461 s of a 728 s local[32] pipeline). The
-    native form removes the Python boundary entirely; identical formulas
-    and null->zeros semantics (J10)."""
+    whole-stage codegen, no Python boundary: shipping 3 x dim floats per
+    candidate row through Arrow for ~10 flops saturated memory bandwidth
+    and stopped the score stage scaling past ~2x at 16M quads. Missing
+    vectors score as zeros (J10)."""
     zeros = F.array_repeat(F.lit(0.0).cast("float"), dim)
     sv = F.coalesce("s_vec", zeros)
     rv = F.coalesce("r_vec", zeros)
@@ -488,63 +389,10 @@ def score_candidates(
     candidates: DataFrame,
     kb_triples: DataFrame,
     kge: DataFrame,
-    entity_class: DataFrame | None = None,
-    vector_features: bool = False,
-    max_vector_vocab: int = 256,
     kge_entity_rows: int | None = None,
     model_w: "np.ndarray | None" = None,
 ) -> DataFrame:
     feats = attach_features(
         assertions, candidates, kb_triples, kge, kge_entity_rows=kge_entity_rows
     )
-    if vector_features:
-        # vocabulary orderings are dimension tables (the reference's
-        # self.properties / self.classes index lists). The dense one-hot
-        # block is only meaningful for dimension-sized vocabularies (the
-        # reference fixture has ~10 properties / ~340 classes): 2|P|
-        # codegen'd expressions and a 2|P|-float array per candidate row.
-        # Above the budget the encoder switches to the SPARSE form
-        # (active-index arrays + vocab sizes, graph_feature_vectors_sparse)
-        # — same M2 -> M8 contract at the reference's own 1,958-property
-        # scale and beyond, per-row cost proportional to actual KB edges.
-        properties = sorted(
-            r["p"]
-            for r in kb_triples.select("p").distinct().limit(max_vector_vocab + 1).collect()
-        )
-        classes = (
-            sorted(
-                r["class"]
-                for r in entity_class.select("class")
-                .distinct()
-                .limit(max_vector_vocab + 1)
-                .collect()
-            )
-            if entity_class is not None
-            else []
-        )
-        if len(properties) <= max_vector_vocab and len(classes) <= max_vector_vocab:
-            feats = graph_feature_vectors(
-                feats, kb_triples, properties, entity_class, classes
-            )
-            # vector block materialized -> feed it through the Arrow model
-            # surface (the M2 -> M8 contract a trained checkpoint uses)
-            return apply_plausibility_model(feats, model_w=model_w)
-        from .sampling import dictionary_encode
-
-        pindex = dictionary_encode(kb_triples.select("p"), "p", "idx")
-        n_p = pindex.count()
-        cindex = n_c = None
-        if entity_class is not None:
-            cindex = dictionary_encode(entity_class.select("class"), "class", "idx")
-            n_c = cindex.count()
-        feats = graph_feature_vectors_sparse(
-            feats, kb_triples, pindex, n_p,
-            entity_class=entity_class, class_index=cindex, n_classes=n_c or 0,
-        )
-        return apply_plausibility_model(
-            feats,
-            link_vocab=2 * n_p,
-            class_vocab=(2 * (n_c or 0) + n_p) if cindex is not None else None,
-            model_w=model_w,
-        )
     return apply_plausibility_native(feats, model_w=model_w)

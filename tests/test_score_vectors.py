@@ -1,9 +1,9 @@
 """M2 full graph-feature vectors (util_encode.py:96-180) — LinkFeat 2|P|
-and ClassFeat |C|+|P|+|C| blocks, and their pass-through the M8 scorer."""
+and ClassFeat |C|+|P|+|C| blocks — and the native M8 scorer."""
 
 from __future__ import annotations
 
-from kg_curation_spark.stages.score import apply_plausibility_model, graph_feature_vectors
+from kg_curation_spark.stages.score import graph_feature_vectors
 
 
 def _kb(spark):
@@ -42,28 +42,15 @@ def test_classfeat_one_hot_block(spark):
     assert row["class_vec"] == [1.0, 0.0, 1.0, 0.0, 1.0, 1.0]
 
 
-def test_vector_block_flows_through_model_without_shifting_scores(spark):
-    cand = spark.createDataFrame(
-        [("a", "p1", "b", 0.9, 1.0, 0.0, [0.1] * 16, [0.0] * 16, [0.2] * 16)],
-        "subject string, predicate string, entity string, lex_score double, "
-        "link_feat double, node_feat double, s_vec array<float>, "
-        "r_vec array<float>, o_vec array<float>",
+def test_native_scores_match_numpy_reference(spark):
+    """apply_plausibility_native against the same formulas in float64
+    numpy: TransE emb_score = sigmoid(1 / mean|s + r - o|) with missing
+    vectors as zeros, model_score = sigmoid(w . features + b)."""
+    import numpy as np
+
+    from kg_curation_spark.stages.score import (
+        MODEL_FEATURES, MODEL_W, apply_plausibility_native,
     )
-    base = apply_plausibility_model(cand).first()["model_score"]
-    withvec = apply_plausibility_model(
-        graph_feature_vectors(cand, _kb(spark), ["p1", "p2"])
-    ).first()
-    assert "link_vec" not in withvec.asDict()  # consumed, not emitted
-    assert abs(withvec["model_score"] - base) < 1e-12
-
-
-def test_native_scores_match_pandas_scores(spark):
-    """apply_plausibility_native must reproduce the mapInPandas stand-in
-    bit-for-bit-ish (same float64 formulas) — it replaces it in the hot
-    path at corpus scale."""
-    import pyspark.sql.functions as F
-
-    from kg_curation_spark.stages.score import apply_plausibility_native
 
     rows = [
         ("a", "p1", "b", 0.9, 1.0, 0.0, [0.1] * 16, [0.0] * 16, [0.2] * 16),
@@ -76,18 +63,25 @@ def test_native_scores_match_pandas_scores(spark):
         "r_vec array<float>, o_vec array<float>"
     )
     cand = spark.createDataFrame(rows, schema)
-    a = {
-        (r["subject"], r["entity"]): (r["emb_score"], r["model_score"])
-        for r in apply_plausibility_model(cand).collect()
-    }
-    b = {
-        (r["subject"], r["entity"]): (r["emb_score"], r["model_score"])
+    got = {
+        (r["subject"], r["entity"]): r
         for r in apply_plausibility_native(cand, dim=16).collect()
     }
-    assert a.keys() == b.keys()
-    for k in a:
-        assert abs(a[k][0] - b[k][0]) < 1e-9, (k, a[k], b[k])
-        assert abs(a[k][1] - b[k][1]) < 1e-9, (k, a[k], b[k])
+    assert len(got) == len(rows)
+    assert not any(c.endswith("_vec") for c in next(iter(got.values())).asDict())
+
+    def vec(v):
+        return np.zeros(16) if v is None else np.asarray(v, dtype="float32").astype("float64")
+
+    assert MODEL_FEATURES == ["lex_score", "link_feat", "node_feat", "emb_score"]
+    for subj, _, ent, lex, link, node, s_v, r_v, o_v in rows:
+        d = np.abs(vec(s_v) + vec(r_v) - vec(o_v)).mean()
+        emb = 1.0 / (1.0 + np.exp(-1.0 / max(d, 1e-9)))
+        x = np.array([lex, link, node, emb])
+        model = 1.0 / (1.0 + np.exp(-(x @ MODEL_W[:-1] + MODEL_W[-1])))
+        r = got[(subj, ent)]
+        assert abs(r["emb_score"] - emb) < 1e-9, (subj, ent, r["emb_score"], emb)
+        assert abs(r["model_score"] - model) < 1e-9, (subj, ent, r["model_score"], model)
 
 
 def test_sparse_indices_equal_dense_nonzero_positions(spark):
@@ -132,59 +126,6 @@ def test_sparse_indices_equal_dense_nonzero_positions(spark):
     for k, (lv, cv) in dense.items():
         assert sparse[k][0] == [i for i, x in enumerate(lv) if x > 0], k
         assert sparse[k][1] == [i for i, x in enumerate(cv) if x > 0], k
-
-
-def test_sparse_model_pass_through_at_2k_properties(spark):
-    """The M2 -> M8 vector contract at the reference's own property scale
-    (|P| = 1,958, G_properties.csv): score_candidates switches to the
-    sparse form above max_vector_vocab, the sparse block flows through the
-    Arrow model (zero weights), and scores equal the scalar-feature native
-    path — P/R-relevant outputs unchanged."""
-    import pyspark.sql.functions as F
-
-    from kg_curation_spark.stages.score import (
-        apply_plausibility_native, attach_features, score_candidates,
-    )
-    from kg_curation_spark.synth import build_kge
-
-    n_props = 1958
-    kb = spark.range(6000).select(
-        F.concat(F.lit("e"), (F.col("id") * 13 % 800).cast("string")).alias("s"),
-        F.concat(F.lit("p"), (F.col("id") % n_props).cast("string")).alias("p"),
-        F.concat(F.lit("e"), (F.col("id") * 29 % 800).cast("string")).alias("o"),
-    ).distinct()
-    assertions = spark.createDataFrame(
-        [(f"e{i}", f"p{i}", f"lit {i}") for i in range(40)],
-        "subject string, predicate string, literal string",
-    )
-    candidates = spark.createDataFrame(
-        [(f"lit {i}", f"e{(i * 7) % 800}", 0.5, 1) for i in range(40)],
-        "literal_norm string, entity string, lex_score double, rank int",
-    )
-    kge = spark.createDataFrame(
-        [("e1", "e", [0.1] * 16), ("p1", "r", [0.2] * 16)],
-        "id string, kind string, vec array<float>",
-    )
-    ec = spark.createDataFrame(
-        [(f"e{i}", f"c{i % 40}") for i in range(800)], "entity string, class string"
-    )
-    sparse_scores = score_candidates(
-        assertions, candidates, kb, kge, entity_class=ec,
-        vector_features=True, max_vector_vocab=256,
-    )
-    rows = sparse_scores.collect()
-    assert len(rows) == 40
-    native = {
-        (r["subject"], r["entity"]): (r["emb_score"], r["model_score"])
-        for r in apply_plausibility_native(
-            attach_features(assertions, candidates, kb, kge), dim=16
-        ).collect()
-    }
-    for r in rows:
-        k = (r["subject"], r["entity"])
-        # 1e-6: numpy pairwise vs Spark sequential summation order
-        assert abs(r["emb_score"] - native[k][0]) < 1e-6
-        assert abs(r["model_score"] - native[k][1]) < 1e-6
 
 
 def test_complex_reduces_to_distmult_when_imaginary_zero(spark):

@@ -11,9 +11,9 @@ import pyspark.sql.functions as F
 from kg_curation_spark.stages.base import CatalogTableSink, PipelineContext
 
 
-def _run(spark, wd, calls, force=False):
+def _run(spark, wd, calls):
     ctx = PipelineContext(
-        spark=spark, workdir=wd, force=force,
+        spark=spark, workdir=wd,
         sink=CatalogTableSink(table_prefix="kgsink_test_"),
     )
 
